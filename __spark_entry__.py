@@ -19,19 +19,10 @@ capability:
   / ``sample_stratified_hash`` / ``ext_domain_mixture`` hash-check the
   sampling capability with deterministic md5-cutoff membership.
 
-r8 graduations shrank the set from 5: ``ext_dedup_fuzzy`` /
-``ext_dedup_simhash`` now ride an md5 double-hashing lane both engines
-evaluate identically (exact integer signatures - no literals, no
-margins), and ``ext_knn_ivf`` serves an offline-trained FROZEN centroid
-bank whose 3-decimal literals the generated oracle replicates (the r7
-``ext_knn_lsh`` plane-bank discipline, with pinned assignment margins).
-``stream_watermark_late``, ``stream_dedup_state`` and
-``stream_session_stateful`` were upgraded from rows-only to oracled in r5:
-on the in-order AvailableNow replay their emitted sets are closed-form (no
-late drops; dedup on key x hour-bucket under a >= bucket-width watermark;
-emission/timeout closure bounded by the final watermark), so every true
-readStream path is now hash-checked end-to-end (streaming_batch.py
-docstrings carry the per-operator argument).
+Order matters because the verify records only the first 50 ids of
+``queries()`` per round, so the registry is sorted by one key: oracled
+ids that have never been hash-green in a ``CORRECTNESS_r*.json`` ledger
+first, then greens stalest round first, then the rows-only ids.
 """
 
 from __future__ import annotations
@@ -47,59 +38,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from bee_proof_spark.queries import load_all  # noqa: E402
 
 _REGISTRY = load_all()
-
-# ---------------------------------------------------------------- ordering
-# The r1 driver run recorded CORRECTNESS rows for only the first 50 entries
-# of queries(), so dict order IS the test schedule. Sort-key buckets (the
-# first tuple element key() returns): (0) _FRONT ids fixed or newly oracled,
-# plus _REFRESH_FRONT ids whose code was rewritten AFTER their last driver
-# green (forced refresh until a fresher green lands), (1) never-driver-
-# tested ids that have oracles (family-prioritized), (2) untested
-# _NEW_THIS_ROUND ids, (3) ids already driver-green in a previous round
-# (stalest-green first) interleaved with ONE-TIME slots for rows-only ids
-# that have never produced any ledger row - or whose builder source changed
-# since their row landed (re-armed via tools/rows_only_evidence.json, see
-# _rows_only_evidence_current) - (4) rows-only ids whose err=no_oracle row
-# matches their current source - last forever.
-
-_FRONT = [
-    # r1 FAILs, fixed (array outputs serialized / scalarized)
-    "agg_collect_sorted", "agg_percentile_approx", "fn_string_regexp",
-    # array/map outputs serialized before the driver ever reaches them
-    "fn_array_ops", "fn_map_ops",
-    # r1 err=no_oracle, now carrying real oracles
-    "agg_approx_cd", "sort_by_partition", "distribute_cluster_by",
-    "ext_knn_cosine", "ext_knn_cosine_arrow", "ext_dedup_embedding",
-    "ext_multimodal_struct", "ext_dedup_fuzzy_verified",
-    # rows-only ids upgraded to closed-form/invariant oracles
-    "ext_multimodal_framesample", "ext_knn_ann_recall", "ext_text_langid",
-    "transform_script", "fn_url_misc", "fn_sentences",
-]
-
-# Ids that are driver-GREEN but whose code was rewritten after that green
-# landed, paired with the round whose ledger the rewrite postdates: forced
-# to the front until a green row from a LATER round exists, then they sink
-# back into the normal stalest-first rotation (self-retiring). The r7
-# cohort (r6 exact-sum rewrites + streaming fixes) all re-greened in r7
-# and self-retired. r8 cohort: the two greens whose OUTPUT-DERIVING code
-# the r8 graduations rewrote - fuzzy_verified consumes the md5-lane LSH
-# candidates, ann_recall consumes the frozen-quantizer ivf - so their
-# r6 greens describe superseded code until a fresher row lands.
-_REFRESH_FRONT: list[tuple[str, int]] = [
-    ("ext_dedup_fuzzy_verified", 7),
-    ("ext_knn_ann_recall", 7),
-]
-
-# Operators added this round: verified locally, but the r1-era untested
-# families (joins/windows/setops/subqueries - the verdict's explicit ask)
-# take the remaining top-50 slots first; these follow immediately after.
-_NEW_THIS_ROUND = [
-    "ext_dedup_cluster", "stream_stream_join", "scan_binaryfile",
-    "ext_chunk_documents", "ext_decontaminate", "ext_dedup_keep_best",
-    "scan_textfile", "msck_repair_discovery", "analyze_stats",
-    "intersect_all", "except_all", "fn_higher_order", "fn_encode_decode",
-    "join_skew_salted",
-]
 
 _FAMILY_PRIORITY = [
     "joins", "windows", "setops", "subqueries", "tpch", "lateral",
@@ -129,269 +67,17 @@ def _green_rounds() -> dict[str, int]:
     return latest
 
 
-def _prev_green() -> set[str]:
-    """Ids with a hash-green row in any previous round's driver ledger."""
-    return set(_green_rounds())
-
-
-def _ever_ran() -> set[str]:
-    """Ids with ANY driver-ledger row (green, red, or err=no_oracle)."""
-    import glob
-    import json
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    ran: set[str] = set()
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as f:
-                ran |= set(json.load(f))
-        except Exception:
-            pass
-    return ran
-
-
-def _builder_fingerprint(qid: str) -> str:
-    """Source hash of a query's builder plus every in-package function it
-    (transitively) calls - the "did the code that produced the driver row
-    change since" key for rows-only evidence re-arming.
-
-    Widened in r8 (ADVICE): the net now crosses module boundaries within
-    the bee_proof_spark package (names are resolved against each visited
-    function's OWN module, so a helper imported from queries/__init__
-    re-arms its callers when edited) and includes the reprs of referenced
-    module-level PRIMITIVE constants (ints/strings/lists - the LSH_TABLES
-    class of behavior knob), so a constant edit re-arms too. Mutable
-    runtime state (dicts like the family cache, modules, classes) stays
-    excluded - their reprs are not stable across processes. Constants
-    imported inside function bodies from sibling modules remain outside
-    the net (their names don't resolve on the visited module); the frozen
-    IVF bank is the one such case and it is oracled, not rows-only."""
-    import hashlib
-    import inspect
-    import types
-
-    fn = _REGISTRY[qid].builder
-
-    def code_names(code: types.CodeType) -> set[str]:
-        names = set(code.co_names)
-        for c in code.co_consts:
-            if isinstance(c, types.CodeType):
-                names |= code_names(c)
-        return names
-
-    def pure_const(v, depth: int = 0) -> bool:
-        # only reprs that are stable ACROSS PROCESSES may enter the hash:
-        # a container holding a function/object reprs with a memory
-        # address, which would re-arm the id on every run and grow the
-        # stamp log without bound
-        if isinstance(v, (str, int, float, bool, bytes, type(None))):
-            return True
-        # sets are excluded outright: their repr is hash-iteration order,
-        # which string-hash randomization shuffles per process
-        if depth < 4 and isinstance(v, (tuple, list)):
-            return all(pure_const(x, depth + 1) for x in v)
-        if depth < 4 and isinstance(v, dict):
-            return all(
-                pure_const(k, depth + 1) and pure_const(x, depth + 1)
-                for k, x in v.items()
-            )
-        return False
-
-    const_types = (str, int, float, bool, bytes, tuple, list, dict)
-    seen: set[str] = set()
-    parts: list[str] = []
-    stack = [fn]
-    while stack:
-        f = stack.pop()
-        key = f"{getattr(f, '__module__', '')}.{getattr(f, '__qualname__', repr(f))}"
-        if key in seen:
-            continue
-        seen.add(key)
-        try:
-            parts.append(inspect.getsource(f))
-        except (OSError, TypeError):
-            continue
-        code = getattr(f, "__code__", None)
-        mod = sys.modules.get(getattr(f, "__module__", None) or "")
-        if code is None or mod is None:
-            continue
-        for name in sorted(code_names(code)):
-            g = getattr(mod, name, None)
-            if g is None or isinstance(g, types.ModuleType):
-                continue
-            gmod = getattr(g, "__module__", None) or ""
-            if callable(g) and hasattr(g, "__code__") and gmod.startswith(
-                "bee_proof_spark"
-            ):
-                stack.append(g)
-            elif isinstance(g, const_types) and pure_const(g):
-                parts.append(f"{mod.__name__}.{name}={g!r}")
-    return hashlib.sha256("\n".join(sorted(parts)).encode()).hexdigest()[:16]
-
-
-#: The paths whose uncommitted edits make a queries() run "dirty" for
-#: evidence attribution. ONE definition shared by the stamp hook below and
-#: tools/rows_only_evidence._source_tree_clean (r9 review: two divergent
-#: copies could mark a stamp clean under one scope while reconcile's
-#: fallback used another, reintroducing mis-attribution).
-QUERY_SOURCE_PATHS = ("bee_proof_spark", "__spark_entry__.py")
-
-
-def _query_source_tree_clean(repo_dir: str) -> bool:
-    """True when QUERY_SOURCE_PATHS have no uncommitted changes in
-    ``repo_dir``. Unknown (no git, timeout) counts as dirty - never
-    over-claim."""
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            ["git", "-C", repo_dir, "status", "--porcelain", "--",
-             *QUERY_SOURCE_PATHS],
-            capture_output=True, text=True, timeout=30, check=True,
-        ).stdout
-        return out.strip() == ""
-    except Exception:
-        return False
-
-
-def _stamp_is_duplicate(last: dict | None, fps: dict, clean: bool) -> bool:
-    """True only when the FINAL log entry already records (fps, clean).
-
-    Deliberately last-line-only: after a revert to a recently-stamped code
-    state, the reverted state must re-stamp so the next ledger attributes
-    to IT, not to the newer stamp still sitting above it in the log."""
-    return (
-        last is not None
-        and last.get("fps") == fps
-        and last.get("clean", None) == clean
-    )
-
-
-def _stamp_rows_only_fingerprints() -> None:
-    """Append the current rows-only builder fingerprints (with a wall-clock
-    ts) to tools/rows_only_fp_log.jsonl. Called from queries(), so THE CODE
-    THE DRIVER ACTUALLY RUNS stamps itself at run time;
-    tools/rows_only_evidence.py --reconcile then attributes a ledger's
-    evidence rows to the stamp nearest before that ledger landed instead of
-    re-fingerprinting whatever the working tree holds when reconcile happens
-    to run (the r7 ADVICE reconcile-after-edit mis-attribution hazard).
-
-    r9 hardening (r8 ADVICE):
-    - NEVER stamps under pytest: test runs (incl. monkeypatched registries)
-      were mutating the committed log with alternating fingerprints, growing
-      it unboundedly and planting stamps that could steal attribution.
-    - Each stamp records whether the query-source tree was git-clean;
-      --reconcile prefers the last CLEAN stamp before the ledger, so a
-      post-edit local queries() run (dirty tree) that lands between the
-      driver run and the ledger's commit no longer steals attribution from
-      the driver's own clean-tree stamp.
-    - Dedupes against the FINAL stamp only. A wider window (r9 tried 8)
-      suppresses re-stamping when code reverts to a recently-stamped state,
-      so the next ledger would be attributed to the wrong (newer) stamp -
-      and the alternating-registry growth it targeted cannot happen outside
-      pytest, where stamping is disabled entirely (r9 review).
-    """
-    import json
-    import time
-
-    if "PYTEST_CURRENT_TEST" in os.environ or "pytest" in sys.modules:
-        return
-    here = os.path.dirname(os.path.abspath(__file__))
-    path = os.path.join(here, "tools", "rows_only_fp_log.jsonl")
-    fps = {
-        qid: _builder_fingerprint(qid)
-        for qid in _REGISTRY
-        if _REGISTRY[qid].oracle is None
-    }
-    clean = _query_source_tree_clean(here)
-    last = None
-    try:
-        with open(path) as f:
-            for line in f:
-                if line.strip():
-                    last = json.loads(line)
-    except (OSError, ValueError):
-        last = None
-    if _stamp_is_duplicate(last, fps, clean):
-        return
-    with open(path, "a") as f:
-        f.write(json.dumps({"ts": time.time(), "clean": clean, "fps": fps}) + "\n")
-
-
-def _rows_only_evidence_current(qid: str) -> bool:
-    """True when the qid's recorded rows-only evidence fingerprint matches
-    its CURRENT builder source - i.e. the ledger row it owns was produced
-    by this code. False (re-arm the one-time evidence slot) when the file
-    has no entry or the source moved on. tools/rows_only_evidence.py
-    --reconcile refreshes the file at round start, BEFORE code changes, so
-    'current source' still equals 'source the driver ran last round'."""
-    import json
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    path = os.path.join(here, "tools", "rows_only_evidence.json")
-    try:
-        with open(path) as f:
-            recorded = json.load(f)
-    except Exception:
-        return False
-    return recorded.get(qid) == _builder_fingerprint(qid)
-
-
 def _ordered_ids() -> list[str]:
     green_round = _green_rounds()
-    green = set(green_round)
-    ran = _ever_ran()
-    refresh = {
-        qid: i
-        for i, (qid, through) in enumerate(_REFRESH_FRONT)
-        if green_round.get(qid, 0) <= through
-    }
-    # the stalest green round currently in the ledger (0 when ledger empty):
-    # never-run rows-only ids slot right AFTER that cohort (see below)
-    stalest = min(green_round.values(), default=0)
-    ids = list(_REGISTRY)
 
     def key(pair):
         idx, qid = pair
         spec = _REGISTRY[qid]
         mod = spec.builder.__module__.rsplit(".", 1)[-1]
-        fam = (
-            _FAMILY_PRIORITY.index(mod) if mod in _FAMILY_PRIORITY else 99
-        )
-        if qid in _FRONT and qid not in green:
-            # once a front id lands a green driver row it sinks with the rest,
-            # freeing next round's test budget for still-untested families
-            return (0, _FRONT.index(qid), 0, 0)
-        if qid in refresh:
-            # rewritten-after-green: forced refresh, self-retiring once a
-            # green row from a round past the rewrite lands (see
-            # _REFRESH_FRONT); sorted after any un-green _FRONT id
-            return (0, 100 + refresh[qid], 0, 0)
-        if qid in _NEW_THIS_ROUND and qid not in green:
-            return (2, _NEW_THIS_ROUND.index(qid), 0, 0)
-        if spec.oracle is not None and qid not in green:
-            return (1, 0, fam, idx)
-        if spec.oracle is None:
-            if qid in ran and _rows_only_evidence_current(qid):
-                # rows-only ids whose ledger row matches their CURRENT
-                # source sort LAST forever: the row can never change from
-                # err=no_oracle, so a front-50 slot is wasted on them while
-                # any green could be refreshed
-                return (4, 0, fam, idx)
-            # ONE-TIME evidence slot: a rows-only id with NO ledger row of
-            # any kind - or one whose source was rewritten since its row
-            # landed (fingerprint mismatch re-arms the slot) - has never
-            # executed ITS CURRENT CODE on driver hardware. A spark_rows>0
-            # row is still evidence the true readStream/sampler path runs
-            # there, so it outranks all-but-the-stalest green refreshes
-            # (those re-verify again next round anyway); once the row lands
-            # and is reconciled, the id sinks to bucket 4.
-            return (3, stalest + 0.5, fam, idx)
-        # re-verify STALEST greens first: an id last green in r1 is three
-        # rounds of code churn stale by r5; fresher greens wait their turn
-        return (3, green_round.get(qid, 0), fam, idx)
+        fam = _FAMILY_PRIORITY.index(mod) if mod in _FAMILY_PRIORITY else 99
+        return (spec.oracle is None, green_round.get(qid, 0), fam, idx)
 
-    return [qid for _, qid in sorted(enumerate(ids), key=key)]
+    return [qid for _, qid in sorted(enumerate(_REGISTRY), key=key)]
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -403,12 +89,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md section 2."""
-    import contextlib
-
-    # run-time evidence attribution (see _stamp_rows_only_fingerprints);
-    # stamping must never break the driver contract (e.g. read-only tree)
-    with contextlib.suppress(Exception):
-        _stamp_rows_only_fingerprints()
     return {qid: _REGISTRY[qid].builder for qid in _ordered_ids()}
 
 

@@ -80,12 +80,6 @@ _CTAS_RE = re.compile(
 _LITERAL_RE = re.compile(r"'(?:[^'\\]|\\.|'')*'|\"(?:[^\"\\]|\\.)*\"|`[^`]*`")
 
 
-def _blank_literals(sql: str) -> str:
-    """Replace string/backtick literal CONTENTS with spaces (delimiters kept)
-    so keyword classification can't be fooled by literal text."""
-    return _LITERAL_RE.sub(lambda m: m.group(0)[0] + " " + m.group(0)[-1], sql)
-
-
 def _blank_literals_and_comments(sql: str) -> str:
     """Blank literal contents AND ``--``/``/* */`` comments with spaces.
 

@@ -404,3 +404,31 @@ def test_scan_splits_early_exit_bounds_footer_reads(tmp_path, monkeypatch):
     assert Q.scan_splits(str(tmp_path), "wide") == 20  # now fully cached
     assert Q.scan_splits(str(tmp_path), "wide", stop_at=100) == 20
     assert opened == []
+
+
+_CPUS_PROBE = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from bee_proof_spark.session import build_session
+s = build_session(warehouse_dir=sys.argv[2])
+print(s.sparkContext.defaultParallelism)
+s.stop()
+"""
+
+
+def test_build_session_honors_spark_graft_cpus(tmp_path):
+    """With no ``master``, build_session() runs local[$SPARK_GRAFT_CPUS]: the
+    session's defaultParallelism (what bench.py emits as ``cpus_effective``)
+    equals the env value. A fresh process, because the shared test session
+    pins its own master."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _CPUS_PROBE, repo, str(tmp_path / "wh")],
+        capture_output=True, text=True, env=env, timeout=300, check=True,
+    )
+    assert out.stdout.strip().splitlines()[-1] == "2"

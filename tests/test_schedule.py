@@ -1,14 +1,9 @@
-"""Properties of the driver-schedule rotation in __spark_entry__.
+"""Properties of the schedule order in __spark_entry__.
 
-The driver records CORRECTNESS rows for only the first ~50 entries of
-``queries()`` per round, so dict order IS the test schedule. These tests pin
-the budget rules: never-tested oracled ids claim front slots, re-verify
-picks the STALEST greens first, rows-only ids that have NEVER produced a
-driver-ledger row get exactly one evidence slot (sorted just after the
-stalest green cohort), rows-only ids whose err=no_oracle row matches their
-CURRENT builder source never consume a front-50 slot again (a rewrite
-re-arms the slot), and _REFRESH_FRONT force-refreshes greens whose code
-was rewritten after their last driver row.
+The external verify records CORRECTNESS rows for only the first ~50
+entries of ``queries()`` per round, so dict order IS the test schedule. One
+sort key sets it: oracled ids never hash-green in the ledger first, then greens
+stalest round first, then the rows-only ids.
 
 No Spark session needed - ordering is pure ledger arithmetic.
 """
@@ -16,10 +11,13 @@ No Spark session needed - ordering is pure ledger arithmetic.
 from __future__ import annotations
 
 import importlib
+import json
 import os
+import subprocess
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry
 
@@ -31,32 +29,19 @@ def _reload():
 def test_front50_spends_budget_on_never_tested_oracled_ids():
     e = _reload()
     green = e._green_rounds()
-    ran = e._ever_ran()
     front = e._ordered_ids()[:50]
     reg = e._REGISTRY
-    # rows-only ids in the front-50 are allowed ONLY for their one-time
-    # evidence row: any whose ledger row matches its CURRENT source (the
-    # fingerprint file says so) is a wasted slot; a source rewrite re-arms
-    wasted = [
-        q for q in front
-        if reg[q].oracle is None and q in ran and e._rows_only_evidence_current(q)
-    ]
-    assert wasted == [], f"front-50 re-burns slots on ran rows-only ids: {wasted}"
-    never = [q for q in front if q not in green and reg[q].oracle is not None]
-    fresh_rows_only = [q for q in front if reg[q].oracle is None]
-    assert len(never) + len(fresh_rows_only) + sum(
-        1 for q in front if q in green
-    ) == 50
+    assert all(reg[q].oracle is not None for q in front), "rows-only id in front-50"
+    never = [i for i, q in enumerate(front) if q not in green]
+    greens = [i for i, q in enumerate(front) if q in green]
+    if never and greens:
+        assert max(never) < min(greens)
 
 
 def test_reverify_orders_stalest_green_first(monkeypatch):
     e = _reload()
     # Simulate the all-green world (every oracled id green, staggered rounds):
-    # ids green in round 1 must sort before ids green in round 3. Forced
-    # refresh and evidence re-arming are separate mechanics (tested below);
-    # neutralize them so pure staleness ordering is what's under test.
-    monkeypatch.setattr(e, "_REFRESH_FRONT", [])
-    monkeypatch.setattr(e, "_rows_only_evidence_current", lambda q: True)
+    # ids green in round 1 must sort before ids green in round 3.
     reg = e._REGISTRY
     oracled = [q for q in reg if reg[q].oracle is not None]
     fake = {q: 1 + (i % 3) for i, q in enumerate(oracled)}  # rounds 1..3
@@ -65,99 +50,29 @@ def test_reverify_orders_stalest_green_first(monkeypatch):
     greens = [q for q in ordered if q in fake]
     rounds = [fake[q] for q in greens]
     assert rounds == sorted(rounds), "re-verify bucket must be staleness-sorted"
-    ran = e._ever_ran()
     pos = {q: i for i, q in enumerate(ordered)}
-    r1_greens = [q for q in greens if fake[q] == 1]
-    r2_greens = [q for q in greens if fake[q] == 2]
     for q in reg:
-        if reg[q].oracle is not None:
-            continue
-        if q in ran:
-            # permanent err=no_oracle rows sort after every green
+        if reg[q].oracle is None:
             assert pos[q] > max(pos[g] for g in greens), q
-        else:
-            # never-run rows-only: one-time slot between the stalest green
-            # cohort and the next one
-            assert pos[q] > max(pos[g] for g in r1_greens), q
-            assert pos[q] < min(pos[g] for g in r2_greens), q
 
 
-def test_never_run_rows_only_sink_after_their_row_lands(monkeypatch):
-    e = _reload()
-    reg = e._REGISTRY
-    # once every rows-only id has a ledger row MATCHING its current source,
-    # NONE may outrank a green
-    monkeypatch.setattr(e, "_ever_ran", lambda: set(reg))
-    monkeypatch.setattr(e, "_rows_only_evidence_current", lambda q: True)
-    oracled = [q for q in reg if reg[q].oracle is not None]
-    fake = dict.fromkeys(oracled, 1)
-    monkeypatch.setattr(e, "_green_rounds", lambda: fake)
-    ordered = e._ordered_ids()
-    first_rows_only = next(i for i, q in enumerate(ordered) if reg[q].oracle is None)
-    last_green = max(i for i, q in enumerate(ordered) if q in fake)
-    assert last_green < first_rows_only
-
-
-def test_refresh_front_forces_rewritten_greens_and_self_retires(monkeypatch):
-    """A green id listed in _REFRESH_FRONT with through_round >= its latest
-    green round is forced to the schedule front; once a green from a LATER
-    round lands it sinks back into the normal rotation."""
+def test_never_green_first_and_rows_only_last(monkeypatch):
     e = _reload()
     reg = e._REGISTRY
     oracled = [q for q in reg if reg[q].oracle is not None]
-    target = oracled[0]
-    fake = dict.fromkeys(oracled, 5)
-    fake[target] = 3  # stale green, rewritten after r3
-    monkeypatch.setattr(e, "_green_rounds", lambda: fake)
-    monkeypatch.setattr(e, "_REFRESH_FRONT", [(target, 6)])
-    assert e._ordered_ids()[0] == target
-    # a fresh green past through_round retires the forced refresh: the id
-    # must no longer hold the very first slot (it rejoins staleness order)
-    fake[target] = 7
-    ordered = e._ordered_ids()
-    pos = ordered.index(target)
-    greens_r5 = [q for q in oracled if fake[q] == 5]
-    assert pos > max(ordered.index(g) for g in greens_r5)
-
-
-def test_rows_only_rewrite_rearms_evidence_slot(monkeypatch):
-    """A rows-only id WITH a ledger row re-arms its one-time evidence slot
-    when its builder source no longer matches the recorded fingerprint
-    (r6 verdict #3: the Arrow-rewritten ext_knn_lsh never re-evidenced)."""
-    e = _reload()
-    reg = e._REGISTRY
     rows_only = [q for q in reg if reg[q].oracle is None]
-    armed = rows_only[0]
-    monkeypatch.setattr(e, "_REFRESH_FRONT", [])
-    monkeypatch.setattr(e, "_ever_ran", lambda: set(reg))
-    oracled = [q for q in reg if reg[q].oracle is not None]
-    fake = {q: 1 + (i % 3) for i, q in enumerate(oracled)}
+    assert rows_only, "registry has no rows-only id to place"
+    # the LAST registered oracled id is the only one never green: registry
+    # index and family alone would not put it first
+    never = oracled[-1]
+    fake = {q: 1 + (i % 3) for i, q in enumerate(oracled[:-1])}
     monkeypatch.setattr(e, "_green_rounds", lambda: fake)
-    monkeypatch.setattr(
-        e, "_rows_only_evidence_current", lambda q: q != armed
-    )
     ordered = e._ordered_ids()
+    assert ordered[0] == never
     pos = {q: i for i, q in enumerate(ordered)}
-    r1_greens = [q for q in oracled if fake[q] == 1]
-    r2_greens = [q for q in oracled if fake[q] == 2]
-    # re-armed: slots in between the stalest and next green cohorts
-    assert pos[armed] > max(pos[g] for g in r1_greens)
-    assert pos[armed] < min(pos[g] for g in r2_greens)
-    # its siblings (evidence current) stay parked at the back
-    for q in rows_only:
-        if q != armed:
-            assert pos[q] > max(pos[g] for g in oracled)
-
-
-def test_builder_fingerprint_stable_and_distinct():
-    e = _reload()
-    reg = e._REGISTRY
-    rows_only = [q for q in reg if reg[q].oracle is None]
-    fps = {q: e._builder_fingerprint(q) for q in rows_only}
-    # deterministic within a process...
-    assert fps == {q: e._builder_fingerprint(q) for q in rows_only}
-    # ...and builders with different source hash differently
-    assert len(set(fps.values())) == len(fps)
+    assert min(pos[q] for q in rows_only) > max(pos[q] for q in oracled)
+    assert list(e.queries()) == ordered
+    assert list(e.oracle_sql()) == [q for q in ordered if q in set(oracled)]
 
 
 def test_oracle_sql_covers_exactly_the_oracled_ids():
@@ -168,273 +83,43 @@ def test_oracle_sql_covers_exactly_the_oracled_ids():
     assert len(e.queries()) == len(reg)
 
 
-def _load_roe(tmp_path, monkeypatch):
-    import importlib.util
+_NO_SUBPROCESS_PROBE = """
+import json, subprocess, sys
+assert "pytest" not in sys.modules
+spawned = []
+def deny(*args, **kwargs):
+    spawned.append(repr(args[0] if args else kwargs.get("args")))
+    raise OSError("queries() must not start a process")
+subprocess.Popen = deny
+sys.path.insert(0, sys.argv[1])
+import __spark_entry__ as e
+n = (len(e.queries()), len(e.oracle_sql()))
+print(json.dumps({"sizes": n, "spawned": spawned}))
+"""
 
-    spec = importlib.util.spec_from_file_location(
-        "rows_only_evidence",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tools",
-            "rows_only_evidence.py",
-        ),
+
+def _git_status() -> str | None:
+    out = subprocess.run(
+        ["git", "-C", REPO, "status", "--porcelain"],
+        capture_output=True, text=True, check=False,
     )
-    roe = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(roe)
-    monkeypatch.setattr(roe, "HERE", str(tmp_path))
-    monkeypatch.setattr(roe, "EVIDENCE_PATH", str(tmp_path / "ev.json"))
-    monkeypatch.setattr(roe, "FP_LOG_PATH", str(tmp_path / "fp_log.jsonl"))
-    return roe
+    return out.stdout if out.returncode == 0 else None
 
 
-def test_rows_only_evidence_reconcile_uses_runtime_stamp(tmp_path, monkeypatch):
-    """--reconcile must attribute a ledger's evidence rows to the run-time
-    fingerprint stamp nearest BEFORE the ledger landed (the code the driver
-    actually ran) - never to the current working-tree recompute, which may
-    already hold this round's edits (the r7 ADVICE mis-attribution)."""
-    import json
-    import time
-
-    roe = _load_roe(tmp_path, monkeypatch)
-    e = _reload()
-    rows_only = [q for q in e._REGISTRY if e._REGISTRY[q].oracle is None]
-    target, absent = rows_only[0], rows_only[1]
-    # two ledgers: the OLD one also names `absent`, but only the NEWEST
-    # ledger counts as evidence
-    (tmp_path / "CORRECTNESS_r08.json").write_text(
-        json.dumps({absent: {"spark_rows": 3, "err": "no_oracle"}})
+def test_queries_has_no_side_effects_outside_pytest():
+    """queries()/oracle_sql() are pure functions of the registry and the
+    committed ledger: called from a plain process (no pytest imported, no
+    PYTEST_CURRENT_TEST) they start no child process and leave the
+    working tree as it was."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTEST_CURRENT_TEST"}
+    before = _git_status()
+    out = subprocess.run(
+        [sys.executable, "-c", _NO_SUBPROCESS_PROBE, REPO],
+        capture_output=True, text=True, env=env, cwd=REPO, timeout=300,
+        check=True,
     )
-    (tmp_path / "CORRECTNESS_r09.json").write_text(
-        json.dumps({target: {"spark_rows": 5, "err": "no_oracle"}})
-    )
-    now = time.time()
-    with open(tmp_path / "fp_log.jsonl", "w") as f:
-        # the stamp the driver's queries() call left before the ledger...
-        f.write(json.dumps({"ts": now - 60, "fps": {target: "driver-ran-fp"}}))
-        f.write("\n")
-        # ...and a LATER stamp from a post-edit local run must NOT win
-        f.write(json.dumps({"ts": now + 3600, "fps": {target: "edited-fp"}}))
-        f.write("\n")
-    assert roe.main(["--reconcile"]) == 0
-    rec = json.loads((tmp_path / "ev.json").read_text())
-    assert rec == {target: "driver-ran-fp"}
-
-
-def test_rows_only_evidence_reconcile_refuses_unattributable(tmp_path, monkeypatch):
-    """With NO stamp predating the ledger, the fallback is the current
-    recompute - allowed only on a clean source tree. tmp_path is not a git
-    repo (clean-check unknowable -> dirty), so reconcile must refuse rather
-    than silently attribute possibly-edited code; --force overrides."""
-    import json
-
-    roe = _load_roe(tmp_path, monkeypatch)
-    e = _reload()
-    target = next(q for q in e._REGISTRY if e._REGISTRY[q].oracle is None)
-    (tmp_path / "CORRECTNESS_r09.json").write_text(
-        json.dumps({target: {"spark_rows": 5, "err": "no_oracle"}})
-    )
-    assert roe.main(["--reconcile"]) == 1
-    assert json.loads((tmp_path / "ev.json").read_text()) == {}
-    assert roe.main(["--reconcile", "--force"]) == 0
-    rec = json.loads((tmp_path / "ev.json").read_text())
-    assert rec == {target: e._builder_fingerprint(target)}
-
-
-def test_rows_only_evidence_reconcile_prunes_graduated_ids(tmp_path, monkeypatch):
-    """Ids that graduated to oracles must drop out of the evidence file on
-    reconcile - a stale entry is dead weight that would resurrect if the
-    id ever returned to rows-only with old code."""
-    import json
-
-    roe = _load_roe(tmp_path, monkeypatch)
-    e = _reload()
-    target = next(q for q in e._REGISTRY if e._REGISTRY[q].oracle is None)
-    (tmp_path / "ev.json").write_text(
-        json.dumps({"ext_dedup_fuzzy": "oldfp", target: "keepfp"})
-    )
-    (tmp_path / "CORRECTNESS_r09.json").write_text(json.dumps({}))
-    assert roe.main(["--reconcile", "--force"]) == 0
-    rec = json.loads((tmp_path / "ev.json").read_text())
-    assert rec == {target: "keepfp"}
-
-
-def test_builder_fingerprint_sees_constants_and_cross_module_helpers(
-    tmp_path, monkeypatch
-):
-    """The r8 widening (ADVICE): a referenced module-level primitive
-    constant and a same-package CROSS-MODULE callee must both be inside
-    the fingerprint net - an edit to either re-arms the evidence slot.
-    Probed with synthetic in-package modules so the test controls the
-    sources."""
-    import importlib.util
-    import types
-
-    seq = iter(range(100))
-
-    def load(name: str, src: str):
-        # distinct file per version: inspect/linecache cache sources by
-        # path, and same-size same-second rewrites can go stale
-        p = tmp_path / f"{name.rsplit('.', 1)[-1]}_{next(seq)}.py"
-        p.write_text(src)
-        spec = importlib.util.spec_from_file_location(name, p)
-        mod = importlib.util.module_from_spec(spec)
-        sys.modules[name] = mod
-        spec.loader.exec_module(mod)
-        return mod
-
-    helper_src = "KNOB = {knob}\n\ndef helper():\n    return KNOB\n"
-    main_src = (
-        "CONST = {const!r}\n\n"
-        "def builder(spark, sf_dir):\n    return (CONST, helper())\n"
-    )
-    e = _reload()
-    try:
-        h = load("bee_proof_spark._fp_probe_helper", helper_src.format(knob=1))
-        m = load("bee_proof_spark._fp_probe_main", main_src.format(const="a"))
-        m.helper = h.helper
-        monkeypatch.setitem(
-            e._REGISTRY, "___fp_probe___",
-            types.SimpleNamespace(builder=m.builder, oracle=None),
-        )
-        fp0 = e._builder_fingerprint("___fp_probe___")
-        assert fp0 == e._builder_fingerprint("___fp_probe___")  # deterministic
-
-        # editing the CROSS-MODULE helper's constant must change the hash
-        h2 = load("bee_proof_spark._fp_probe_helper", helper_src.format(knob=2))
-        m.helper = h2.helper
-        fp_knob = e._builder_fingerprint("___fp_probe___")
-        assert fp_knob != fp0
-
-        # ...and editing the builder's own module-level constant must too
-        m2 = load("bee_proof_spark._fp_probe_main", main_src.format(const="b"))
-        m2.helper = h2.helper
-        monkeypatch.setitem(
-            e._REGISTRY, "___fp_probe___",
-            types.SimpleNamespace(builder=m2.builder, oracle=None),
-        )
-        assert e._builder_fingerprint("___fp_probe___") != fp_knob
-    finally:
-        sys.modules.pop("bee_proof_spark._fp_probe_helper", None)
-        sys.modules.pop("bee_proof_spark._fp_probe_main", None)
-
-
-def test_rows_only_evidence_clean_stamp_outranks_dirty(tmp_path, monkeypatch):
-    """r9 (r8 ADVICE): a post-edit local queries() run can stamp BETWEEN the
-    driver run and the ledger's git commit - wall-clock ordering alone would
-    attribute the driver's evidence to the edited code. Stamps now carry a
-    git-clean flag; reconcile prefers the last CLEAN stamp before the ledger
-    (the driver runs the committed tree), falling back to any stamp only for
-    pre-r9 logs without the flag."""
-    import json
-    import time
-
-    roe = _load_roe(tmp_path, monkeypatch)
-    e = _reload()
-    target = next(q for q in e._REGISTRY if e._REGISTRY[q].oracle is None)
-    (tmp_path / "CORRECTNESS_r09.json").write_text(
-        json.dumps({target: {"spark_rows": 5, "err": "no_oracle"}})
-    )
-    now = time.time()
-    with open(tmp_path / "fp_log.jsonl", "w") as f:
-        # driver's stamp: committed tree, clean
-        f.write(json.dumps({"ts": now - 60, "clean": True,
-                            "fps": {target: "driver-ran-fp"}}) + "\n")
-        # post-edit local run sneaking in before the ledger commit: dirty
-        f.write(json.dumps({"ts": now - 30, "clean": False,
-                            "fps": {target: "edited-fp"}}) + "\n")
-    assert roe.main(["--reconcile"]) == 0
-    assert json.loads((tmp_path / "ev.json").read_text()) == {target: "driver-ran-fp"}
-
-
-def test_stamping_is_inert_under_pytest(tmp_path):
-    """queries() must NOT mutate the committed fp log during test runs
-    (r8 ADVICE: monkeypatched-registry tests alternated fingerprints and
-    grew tools/rows_only_fp_log.jsonl unboundedly). Under pytest the stamp
-    hook is a no-op - the committed log is byte-identical across queries()
-    calls here."""
-    import os as _os
-
-    e = _reload()
-    log = _os.path.join(
-        _os.path.dirname(_os.path.abspath(e.__file__)), "tools", "rows_only_fp_log.jsonl"
-    )
-    before = open(log, "rb").read() if _os.path.exists(log) else b""
-    e.queries()
-    e.queries()
-    after = open(log, "rb").read() if _os.path.exists(log) else b""
-    assert before == after
-
-
-def test_rows_only_evidence_stale_clean_stamp_does_not_outrank(tmp_path, monkeypatch):
-    """r9 review: the clean-stamp preference must be bounded to the driver
-    pass that produced the ledger (queries() stamps at run start, ledger
-    lands at run end). A clean stamp from a run HOURS earlier must not
-    outrank the nearest-before dirty stamp - the dirty run produced this
-    ledger, and attributing its fps is honest (a non-matching fps just
-    re-arms the slot), while resurrecting the stale clean fps over-claims."""
-    import json
-    import time
-
-    roe = _load_roe(tmp_path, monkeypatch)
-    e = _reload()
-    target = next(q for q in e._REGISTRY if e._REGISTRY[q].oracle is None)
-    (tmp_path / "CORRECTNESS_r09.json").write_text(
-        json.dumps({target: {"spark_rows": 5, "err": "no_oracle"}})
-    )
-    now = time.time()
-    with open(tmp_path / "fp_log.jsonl", "w") as f:
-        # clean stamp from a PRIOR run, well outside the window
-        f.write(json.dumps({"ts": now - 7 * 3600, "clean": True,
-                            "fps": {target: "stale-clean-fp"}}) + "\n")
-        # the run that actually produced this ledger (dirty tree)
-        f.write(json.dumps({"ts": now - 30, "clean": False,
-                            "fps": {target: "dirty-run-fp"}}) + "\n")
-    assert roe.main(["--reconcile"]) == 0
-    assert json.loads((tmp_path / "ev.json").read_text()) == {target: "dirty-run-fp"}
-
-
-def test_rows_only_evidence_late_committed_ledger_keeps_clean_stamp(
-    tmp_path, monkeypatch
-):
-    """r10 (r9 ADVICE): the clean-stamp window is anchored to the NEWEST
-    stamp before the ledger (a run-time proxy), not the ledger's commit
-    timestamp. A ledger committed many hours after the driver run must
-    still attribute to the run's clean stamp - not fall back to a post-run
-    dirty stamp just because the commit was slow."""
-    import json
-    import time
-
-    roe = _load_roe(tmp_path, monkeypatch)
-    e = _reload()
-    target = next(q for q in e._REGISTRY if e._REGISTRY[q].oracle is None)
-    # ledger file mtime = now, simulating a commit ~8h after the run
-    (tmp_path / "CORRECTNESS_r09.json").write_text(
-        json.dumps({target: {"spark_rows": 5, "err": "no_oracle"}})
-    )
-    now = time.time()
-    with open(tmp_path / "fp_log.jsonl", "w") as f:
-        # the driver run's clean stamp, 8h before the ledger landed
-        f.write(json.dumps({"ts": now - 8 * 3600, "clean": True,
-                            "fps": {target: "driver-ran-fp"}}) + "\n")
-        # a post-run dirty edit 90 min later - within 6h of the clean stamp
-        f.write(json.dumps({"ts": now - 6.5 * 3600, "clean": False,
-                            "fps": {target: "edited-fp"}}) + "\n")
-    assert roe.main(["--reconcile"]) == 0
-    assert json.loads((tmp_path / "ev.json").read_text()) == {target: "driver-ran-fp"}
-
-
-def test_stamp_dedupe_is_last_line_only():
-    """r9 review: a wider dedupe window suppressed re-stamping after a
-    revert to a recently-stamped state, silently attributing the next
-    ledger to the wrong (newer) stamp. Only the final log entry may
-    suppress a stamp."""
-    e = _reload()
-    a = {"fps": {"q": "fpA"}, "clean": True}
-    assert e._stamp_is_duplicate(a, {"q": "fpA"}, True)          # true repeat
-    assert not e._stamp_is_duplicate(None, {"q": "fpA"}, True)   # empty log
-    assert not e._stamp_is_duplicate(a, {"q": "fpB"}, True)      # code moved on
-    assert not e._stamp_is_duplicate(a, {"q": "fpA"}, False)     # clean flipped
-    # revert scenario: log ends with B; current state A (stamped earlier,
-    # but NOT last) must re-stamp
-    b = {"fps": {"q": "fpB"}, "clean": True}
-    assert not e._stamp_is_duplicate(b, {"q": "fpA"}, True)
+    res = json.loads(out.stdout.strip().splitlines()[-1])
+    assert res["spawned"] == []
+    reg = entry._REGISTRY
+    assert res["sizes"] == [len(reg), sum(s.oracle is not None for s in reg.values())]
+    assert _git_status() == before

@@ -1,9 +1,10 @@
 """Pre-round verification sweep: every registered query vs its DuckDB oracle
 in a DRIVER-LIKE session (Spark 4 defaults: ANSI ON, no engine profile).
 
-This replicates the driver's t2 correctness gate for all 193 ids at sf0.01
-(the driver itself caps at ~50/round), and is the discipline that keeps the
-CORRECTNESS ledger green: run it fresh-process before ending a round.
+This replicates the external t2 correctness gate for every registered id
+at sf0.01 (that gate itself caps at ~50/round), and is the discipline that
+keeps the CORRECTNESS ledger green: run it fresh-process before ending a
+round.
 
 Usage:
     python tools/sweep.py [sf_dir]      # default /root/testdata/sf0.01
