@@ -137,9 +137,7 @@ _FAMILY_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 #: staged-table shape a cluster deployment uses on the object store, with
 #: columnar compression instead of java-serialized blocks. The 100x fixture
 #: (76 MB docs) stays on the fast in-memory path.
-_DISK_STAGE_DOC_BYTES = int(
-    os.environ.get("BEE_PROOF_FAMILY_DISK_BYTES", 256 * 1024 * 1024)
-)
+_DISK_STAGE_DOC_BYTES = 256 * 1024 * 1024
 #: Embedding families cut over to disk much later than text families: a
 #: text corpus fans out into postings/signature tables many times its
 #: size, but the unit-vector table is ~2x corpus, and re-reading it as
@@ -148,9 +146,7 @@ _DISK_STAGE_DOC_BYTES = int(
 #: decode of 1 GB twice per query). Below this bound block-manager
 #: staging is strictly faster and spills gracefully; above it the staged
 #: table starts to crowd executor memory and durability wins.
-_DISK_STAGE_EMB_BYTES = int(
-    os.environ.get("BEE_PROOF_EMB_DISK_BYTES", 2 * 1024**3)
-)
+_DISK_STAGE_EMB_BYTES = 2 * 1024**3
 
 
 def _family_stage_dir(sf_dir: str, stage: str) -> str:
@@ -1343,9 +1339,8 @@ WHERE round(list_dot_product(a.unit, b.unit), 4) >= 0.4
 #: (measured: at 1000x data, S=2048 shipped ~100 GB of tile copies and
 #: exhausted local spill disk; S=4096 + float32 payloads fit the 200k-vector
 #: blocks at 100x but kernel-OOMed one box at 2M vectors / 218k-row blocks,
-#: where S=8192 halves the copy count and fits). Like shuffle parallelism,
-#: this is an executor-memory sizing knob, env-overridable per deployment.
-_EMB_TILE_ROWS = int(os.environ.get("SPARK_GRAFT_EMB_TILE", "4096"))
+#: where S=8192 halves the copy count and fits).
+_EMB_TILE_ROWS = 4096
 
 
 @register("ext_dedup_embedding", oracle=_EMB_DEDUP_ORACLE)
@@ -1477,18 +1472,20 @@ def ext_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: ext_dedup_embedding_lsh knobs. Planes per table is the selectivity dial:
+#: ext_dedup_embedding_lsh constants. Planes per table is the selectivity dial:
 #: buckets = 2^planes per table, so occupancy ~ corpus/2^planes; tables lift
 #: recall; the bucket cap is the same skew fence the text-LSH family carries
 #: (a degenerate bucket can never go quadratic past cap^2). Plane count
 #: SELF-SIZES from the corpus row count (catalog statistic, footer-only) -
 #: a fixed default is a disk bomb at scale: the r6 1000x probe relaunched
-#: without its env override ran 2M vectors through 2^8 buckets/table
+#: without its plane override ran 2M vectors through 2^8 buckets/table
 #: (~7.8k occupancy -> ~6e10 candidate pairs) and filled the 250 GB disk
-#: mid-shuffle. SPARK_GRAFT_EMB_LSH_PLANES still overrides for probes.
-_EMB_LSH_TABLES = int(os.environ.get("SPARK_GRAFT_EMB_LSH_TABLES", "8"))
-_EMB_LSH_BUCKET_CAP = int(os.environ.get("SPARK_GRAFT_EMB_LSH_CAP", "10000"))
-_EMB_LSH_PLANES_ENV = os.environ.get("SPARK_GRAFT_EMB_LSH_PLANES")
+#: mid-shuffle. A non-None _EMB_LSH_PLANES_PIN replaces the sizing (and
+#: the generated oracle's P) - the forced-gates table pins it to exercise
+#: the parameterized bucket math at a non-fixture P.
+_EMB_LSH_TABLES = 8
+_EMB_LSH_BUCKET_CAP = 10000
+_EMB_LSH_PLANES_PIN: int | None = None
 _EMB_LSH_PLANES_MAX = 24
 #: Corpora at or below this row count use the fixture-regime constant P=8 -
 #: the plane count baked into the generated DuckDB oracle (all oracle
@@ -1514,25 +1511,23 @@ _EMB_LSH_TARGET_OCC = 2
 #: memory-safe). 512 MiB (~1M vectors) is the measured comfort bound:
 #: TWO broadcast builds of a 1.1 GB table failed outright on a default
 #: driver heap ("Not enough memory to build and broadcast", r6 probe).
-_EMB_BCAST_BYTES = int(
-    os.environ.get("SPARK_GRAFT_EMB_BCAST_BYTES", str(512 * 1024**2))
-)
+_EMB_BCAST_BYTES = 512 * 1024**2
 
 
 def _emb_lsh_planes_for(n_rows: int | None) -> int:
     """Planes per table for a corpus of ``n_rows`` vectors (docs above).
     An unknown row count raises rather than guessing: guessing small on an
     unreadable-footer corpus re-creates the quadratic blowup the sizing
-    exists to prevent - the operator pins SPARK_GRAFT_EMB_LSH_PLANES
-    instead."""
+    exists to prevent."""
     import math
 
-    if _EMB_LSH_PLANES_ENV is not None:
-        return min(int(_EMB_LSH_PLANES_ENV), _EMB_LSH_PLANES_MAX)
+    if _EMB_LSH_PLANES_PIN is not None:
+        return min(_EMB_LSH_PLANES_PIN, _EMB_LSH_PLANES_MAX)
     if n_rows is None:
         raise RuntimeError(
             "ext_dedup_embedding_lsh: embeddings row count unavailable from "
-            "parquet footers; set SPARK_GRAFT_EMB_LSH_PLANES explicitly"
+            "parquet footers; refusing to guess a plane count for an "
+            "unknown corpus size"
         )
     if n_rows <= _EMB_LSH_FIXTURE_ROWS:
         return 8
@@ -1569,7 +1564,7 @@ def _emb_lsh_oracle() -> str:
     >= 0.4 verify. The oracle is generated, not approximated: every plane
     literal matches the Spark plan digit for digit.
 
-    The oracle pins the FIXTURE-REGIME plane count (8, or the env override)
+    The oracle pins the FIXTURE-REGIME plane count (8, or the pin)
     - every oracle comparison runs at <= 2k vectors where the adaptive
     sizing resolves to exactly that; at scale-P the LSH-specific semantics
     are covered by the subset-of-exact property test instead
@@ -1655,8 +1650,8 @@ def ext_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: bucket rows are (vec_id, tbl, bucket) - vectors cross the
     wire once per table, not once per pair; the self-join is equi-keyed on
     (tbl, bucket) so AQE sizes it; the vec_id-ordered row_number cap
-    (default 10k, env SPARK_GRAFT_EMB_LSH_CAP) bounds any degenerate
-    bucket at cap^2 pairs; only DISTINCT candidate pairs fetch unit
+    (_EMB_LSH_BUCKET_CAP, 10k) bounds any degenerate bucket at cap^2
+    pairs; only DISTINCT candidate pairs fetch unit
     vectors for the exact rerank, and that verify join broadcasts the
     unit-vector table while it fits (hash join past the bound - never a
     sort of 530 B-wide rows; _EMB_BCAST_BYTES). Planes per table SELF-SIZE from the
@@ -2113,13 +2108,8 @@ FROM c
 """
 
 
-#: ext_pack_sequences' banded-prefix-sum gate. Env-overridable
-#: (SPARK_GRAFT_PACK_BAND_BYTES) so the forced-on oracle sweep can
-#: hash-verify the over-gate banded plan at fixture scale
-#: (tools/sweep.py --force-gates; SCALE.md r6).
-_PACK_BAND_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PACK_BAND_BYTES", 128 * 1024 * 1024)
-)
+#: ext_pack_sequences' banded-prefix-sum gate.
+_PACK_BAND_BYTES = 128 * 1024 * 1024
 
 
 @register("ext_pack_sequences", oracle=_PACK_ORACLE)

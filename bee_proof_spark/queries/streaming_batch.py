@@ -165,7 +165,9 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory_sink(
         windowed,
         output_mode="append",
-        state_partitions=streaming_state_partitions(sf_dir, "agg", rows=_rows),
+        state_partitions=streaming_state_partitions(
+            sf_dir, "agg", rows=_rows, cores=spark.sparkContext.defaultParallelism
+        ),
         input_rows=_rows,
     )
 
@@ -228,7 +230,9 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory_sink(
         deduped,
         output_mode="append",
-        state_partitions=streaming_state_partitions(sf_dir, "insert_heavy", rows=_rows),
+        state_partitions=streaming_state_partitions(
+            sf_dir, "insert_heavy", rows=_rows, cores=spark.sparkContext.defaultParallelism
+        ),
         input_rows=_rows,
     )
 
@@ -299,7 +303,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory_sink(
         joined,
         output_mode="append",
-        state_partitions=streaming_state_partitions(sf_dir, "join", rows=_rows),
+        state_partitions=streaming_state_partitions(
+            sf_dir, "join", rows=_rows, cores=spark.sparkContext.defaultParallelism
+        ),
         input_rows=_rows,
     )
 
@@ -483,7 +489,9 @@ def stream_session_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory_sink(
         sessions,
         output_mode="append",
-        state_partitions=streaming_state_partitions(sf_dir, "insert_heavy", rows=_rows),
+        state_partitions=streaming_state_partitions(
+            sf_dir, "insert_heavy", rows=_rows, cores=spark.sparkContext.defaultParallelism
+        ),
         input_rows=_rows,
     )
 

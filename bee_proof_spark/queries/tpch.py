@@ -8,8 +8,6 @@ sequential DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -206,12 +204,8 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: q4's probe-dedup fact-size gate (see tpch_q4 docstring for the measured
-#: crossover). Env-overridable (SPARK_GRAFT_Q4_PROBE_BYTES) so the forced-on
-#: oracle sweep can hash-verify the over-gate pre-dedup plan at fixture
-#: scale (tools/sweep.py --force-gates; SCALE.md r6).
-_Q4_PROBE_DEDUP_BYTES = int(
-    os.environ.get("SPARK_GRAFT_Q4_PROBE_BYTES", 128 * 1024 * 1024)
-)
+#: crossover).
+_Q4_PROBE_DEDUP_BYTES = 128 * 1024 * 1024
 
 _Q4_ORACLE = """
 SELECT o_orderpriority, count(*) AS order_count

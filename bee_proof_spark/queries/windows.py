@@ -8,8 +8,6 @@ over the same Window spec share a single sort.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -32,12 +30,7 @@ def _w():
 #: lesson); above it the plain form's parallelism cap (= distinct values of
 #: the 3-value partition key, on ANY cluster size) makes banding win 1.6x at
 #: 100x and 2.5x at 1000x (measured, SCALE.md r5).
-#: Env-overridable (SPARK_GRAFT_BANDED_RANK_BYTES) so the forced-on oracle
-#: sweep can hash-verify the over-gate banded plan at fixture scale
-#: (tools/sweep.py --force-gates; SCALE.md r6).
-_BANDED_RANK_BYTES = int(
-    os.environ.get("SPARK_GRAFT_BANDED_RANK_BYTES", 32 * 1024 * 1024)
-)
+_BANDED_RANK_BYTES = 32 * 1024 * 1024
 
 
 def _banded_row_number(

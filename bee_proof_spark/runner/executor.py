@@ -187,7 +187,6 @@ class ScriptRunner:
         spark: SparkSession,
         execute: bool = False,
         verbose: bool = True,
-        debug: bool = False,
         out: Callable[[str], None] | None = None,
         max_print_rows: int = 1000,
         release: str | None = None,
@@ -195,7 +194,6 @@ class ScriptRunner:
         self.spark = spark
         self.execute = execute  # False = dry-run (enableHadoop=false default)
         self.verbose = verbose
-        self.debug = debug
         self.out = out or print
         self.max_print_rows = max_print_rows
         # Per-release Hive-pin feature gating (release_gates.py). None = no
@@ -286,27 +284,13 @@ class ScriptRunner:
                 # too (catalog-only), so print in both modes. Same driver-
                 # memory cap as the query branch: SHOW PARTITIONS on a
                 # million-partition table must not collect a million rows.
-                rows = self.spark.sql(sql).limit(self.max_print_rows + 1).collect()
-                for r in rows[: self.max_print_rows]:
-                    self.out("\t".join("NULL" if v is None else str(v) for v in r))
-                if len(rows) > self.max_print_rows:
-                    self.out(f"> Output truncated at {self.max_print_rows} rows")
+                self._print_rows(self.spark.sql(sql))
             elif kind == "ddl":
                 self.spark.sql(sql).collect()
             elif self.execute:
                 df = self.spark.sql(sql)
                 if self._is_query(sql):
-                    rows = df.limit(self.max_print_rows + 1).collect()
-                    for r in rows[: self.max_print_rows]:
-                        self.out("\t".join("NULL" if v is None else str(v) for v in r))
-                    if len(rows) > self.max_print_rows:
-                        # the +1 sentinel row: signal the cap instead of
-                        # silently shaping the output (the reference CLI
-                        # prints everything; the cap is this runner's
-                        # driver-memory guard, so say when it bound)
-                        self.out(
-                            f"> Output truncated at {self.max_print_rows} rows"
-                        )
+                    self._print_rows(df)
                 else:
                     df.collect()  # force eager DML side effects uniformly
             else:
@@ -317,6 +301,17 @@ class ScriptRunner:
         except Exception as ex:  # ParseException, AnalysisException, runtime
             msg = str(ex).split("\n\tat ")[0].strip()
             raise StatementError(script, stmt.line, sql, msg) from ex
+
+    def _print_rows(self, df) -> None:
+        """Print up to ``max_print_rows`` rows tab-separated. The +1 sentinel
+        row signals the cap instead of silently shaping the output (the
+        reference CLI prints everything; the cap is this runner's
+        driver-memory guard, so say when it bound)."""
+        rows = df.limit(self.max_print_rows + 1).collect()
+        for r in rows[: self.max_print_rows]:
+            self.out("\t".join("NULL" if v is None else str(v) for v in r))
+        if len(rows) > self.max_print_rows:
+            self.out(f"> Output truncated at {self.max_print_rows} rows")
 
     @staticmethod
     def _is_query(sql: str) -> bool:
@@ -364,7 +359,6 @@ def run_manifest(
         spark,
         execute=manifest.enable_hadoop,
         verbose=manifest.verbose_output,
-        debug=manifest.debug_output,
         out=out,
         release=release,
     )

@@ -25,7 +25,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-#: Default files ingested per micro-batch when replaying the 4-file snapshot.
+#: Files ingested per micro-batch when replaying the 4-file snapshot.
 #: 2 keeps the replay MULTI-batch - the watermark still advances mid-stream
 #: (batch 2 runs under batch 1's watermark), so bucket eviction and
 #: event-time timeouts are exercised exactly as before and every operator's
@@ -38,19 +38,7 @@ from pyspark.sql.types import (
 #: A cluster backfill sizes the same knob (maxFilesPerTrigger /
 #: maxBytesPerTrigger) to its own throughput; 1-file batches are the
 #: degenerate setting, not the production one.
-_REPLAY_FILES_PER_TRIGGER_DEFAULT = 2
-
-
-def replay_files_per_trigger() -> int:
-    """``SPARK_GRAFT_REPLAY_FILES_PER_TRIGGER`` resolved at CALL time, not
-    import time (r14 verdict item 9): freezing the env in a module constant
-    meant a caller exporting it after import silently got the default - the
-    exact freeze-at-import bug class session._dynamic_conf exists to avoid."""
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_REPLAY_FILES_PER_TRIGGER", _REPLAY_FILES_PER_TRIGGER_DEFAULT
-        )
-    )
+_REPLAY_FILES_PER_TRIGGER = 2
 
 EVENTS_SCHEMA = StructType(
     [
@@ -135,7 +123,7 @@ def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         build = f"{snap}.build-{os.getpid()}"
         shutil.rmtree(build, ignore_errors=True)
         # Range-partition by ts into 4 roughly time-ordered files: with
-        # replay_files_per_trigger() (default 2) the replay yields multiple
+        # _REPLAY_FILES_PER_TRIGGER (2) the replay yields multiple
         # micro-batches whose event times advance, so watermarks progress
         # and event-time timeouts fire (mirrors a live source; a
         # single-file snapshot would never advance the watermark
@@ -189,12 +177,14 @@ def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
     return (
         spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", replay_files_per_trigger())
+        .option("maxFilesPerTrigger", _REPLAY_FILES_PER_TRIGGER)
         .parquet(snap)
     )
 
 
-def _streaming_partitions_for_rows(rows: int, profile: str = "insert_heavy") -> int:
+def _streaming_partitions_for_rows(
+    rows: int, profile: str = "insert_heavy", *, cores: int
+) -> int:
     """State-partition width from the corpus row count AND the operator's
     state profile. Every regime below is a measured floor (SCALE.md
     streaming sections); the same-day 100M-event ladders are what split
@@ -220,15 +210,14 @@ def _streaming_partitions_for_rows(rows: int, profile: str = "insert_heavy") -> 
       while the bucket-dedup at 100x improves 36.6 -> 25.1 from 32 to
       64. Row curve capped at 4x cores.
 
-    Cores read SPARK_GRAFT_CPUS (falling back to os.cpu_count); on a
-    cluster the same formula reads total executor cores, so every cap is
+    ``cores`` is the session's ``defaultParallelism``: the local core count
+    here, total executor cores on a cluster, so every cap is
     parallelism-relative and grows with the deployment.
     """
     import math
 
     if profile == "agg":
         return 8
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
     mult = 1 if profile == "join" else 4
     cap = 2 ** int(math.log2(max(8, mult * cores)))
     raw = max(8, min(1024, rows // 250_000 or 1))
@@ -239,7 +228,7 @@ _UNSET = object()
 
 
 def streaming_state_partitions(
-    sf_dir: str, profile: str = "insert_heavy", rows=_UNSET
+    sf_dir: str, profile: str = "insert_heavy", rows=_UNSET, *, cores: int
 ) -> int | None:
     """Shuffle-partition count for STATEFUL streaming queries, sized to the
     events corpus and the operator's state ``profile`` — or None to keep
@@ -268,7 +257,7 @@ def streaming_state_partitions(
         rows = events_row_count(sf_dir)
     if not rows:  # None (unknown) or 0 (empty) -> keep the session default
         return None
-    return _streaming_partitions_for_rows(rows, profile)
+    return _streaming_partitions_for_rows(rows, profile, cores=cores)
 
 
 def events_row_count(sf_dir: str) -> int | None:
@@ -294,12 +283,7 @@ def events_row_count(sf_dir: str) -> int | None:
 #: cluster pipeline writes a real table; the parquet spill is that same
 #: shape locally, and the returned DataFrame contract is unchanged. The
 #: driver/test fixtures (<= 1M events) stay on the zero-IO memory path.
-#: Env-overridable (SPARK_GRAFT_PARQUET_SINK_ROWS) so the forced-on oracle
-#: sweep can hash-verify the parquet-spill sink path at fixture scale
-#: (tools/sweep.py --force-gates; SCALE.md r6).
-_PARQUET_SINK_ROWS = int(
-    os.environ.get("SPARK_GRAFT_PARQUET_SINK_ROWS", 20_000_000)
-)
+_PARQUET_SINK_ROWS = 20_000_000
 
 
 def _parquet_sink_dir() -> str:

@@ -10,14 +10,60 @@ passes here.
 
 from __future__ import annotations
 
+import contextlib
+import dataclasses
 import datetime as _dt
 import decimal as _decimal
+import importlib
 import math
 
 import duckdb
 from pyspark.sql import SparkSession
 
-from bee_proof_spark.queries import TABLES, QuerySpec
+from bee_proof_spark.queries import REGISTRY, TABLES, QuerySpec
+
+#: (module under bee_proof_spark, attribute, at-scale value) for every size
+#: gate. Each gate site reads its constant at call time, so setting these
+#: after import is enough.
+FORCED_GATES = (
+    ("queries.windows", "_BANDED_RANK_BYTES", 0),  # banded ranking
+    ("queries.tpch", "_Q4_PROBE_DEDUP_BYTES", 0),  # q4 probe pre-dedup
+    ("queries.extensions", "_PACK_BAND_BYTES", 0),  # banded prefix sum
+    ("queries.extensions", "_DISK_STAGE_DOC_BYTES", 0),  # disk-staged text family
+    ("queries.extensions", "_DISK_STAGE_EMB_BYTES", 0),  # disk-staged emb family
+    ("streaming.replay", "_PARQUET_SINK_ROWS", 1),  # parquet stream sink
+    ("queries.extensions", "_EMB_TILE_ROWS", 64),  # multi-tile pair join
+    # Non-fixture plane count: the parameterized bucket math a scale run
+    # takes. P=10 still leaves rows to hash (4 at sf0.001, 5 at sf0.01, 87 at
+    # sf0.1); P >= 13 empties both engines' output at sf0.01 and below.
+    ("queries.extensions", "_EMB_LSH_PLANES_PIN", 10),
+)
+
+
+@contextlib.contextmanager
+def forced_gates():
+    """Set every ``FORCED_GATES`` attribute for the duration of the block,
+    restoring the plain values on exit. The family-stage cache is dropped on
+    both edges so no stage built under one branch serves the other, and the
+    ``ext_dedup_embedding_lsh`` oracle, generated at import from the plane
+    count, is regenerated for the pinned count."""
+    from bee_proof_spark.queries import extensions
+
+    saved = []
+    lsh = REGISTRY["ext_dedup_embedding_lsh"]
+    try:
+        for mod, attr, value in FORCED_GATES:
+            m = importlib.import_module(f"bee_proof_spark.{mod}")
+            saved.append((m, attr, getattr(m, attr)))
+            setattr(m, attr, value)
+        REGISTRY[lsh.id] = dataclasses.replace(lsh, oracle=extensions._emb_lsh_oracle())
+        extensions._FAMILY_CACHE.clear()
+        yield
+    finally:
+        for m, attr, value in reversed(saved):
+            setattr(m, attr, value)
+        REGISTRY[lsh.id] = lsh
+        extensions._FAMILY_CACHE.clear()
 
 
 def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -222,14 +222,14 @@ def test_emb_lsh_planes_self_size(monkeypatch, tmp_path):
     """Hyperplane count self-sizes from the embeddings row count: the
     fixture-regime constant 8 wherever an oracle comparison runs
     (<= 4096 rows), ceil(log2(n/2)) above it (occupancy ~2 keeps candidate
-    pairs linear in the corpus), capped at 24; env override wins; an
+    pairs linear in the corpus), capped at 24; a pinned count wins; an
     unknown row count raises instead of guessing small (a P=8 guess on a
     2M-vector corpus is a measured disk bomb - SCALE.md r6)."""
     import pytest as _pytest
 
     import bee_proof_spark.queries.extensions as X
 
-    monkeypatch.setattr(X, "_EMB_LSH_PLANES_ENV", None)
+    monkeypatch.setattr(X, "_EMB_LSH_PLANES_PIN", None)
     f = X._emb_lsh_planes_for
     assert [f(n) for n in (500, 2000, 4096)] == [8, 8, 8]
     assert f(2_000_000) == 20 and f(10**9) == 24  # adaptive, then capped
@@ -244,8 +244,8 @@ def test_emb_lsh_planes_self_size(monkeypatch, tmp_path):
     bad.write_bytes(b"not parquet")
     assert table_rows(str(tmp_path), "embeddings") is None
     assert table_rows(str(tmp_path), "missing") is None
-    monkeypatch.setattr(X, "_EMB_LSH_PLANES_ENV", "20")
-    assert f(None) == 20  # env override needs no row count
+    monkeypatch.setattr(X, "_EMB_LSH_PLANES_PIN", 20)
+    assert f(None) == 20  # a pin needs no row count
     assert f(10**9) == 20
 
 

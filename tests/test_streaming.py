@@ -135,8 +135,9 @@ def test_verification_api_end_to_end(spark, tmp_path, capsys):
 
 def test_streaming_state_partitions_sizing(tmp_path, monkeypatch):
     """State-partition sizing: floor of 8 on small fixtures, row-scaled
-    above it, explicit SPARK_GRAFT_SHUFFLE wins, and a missing events table
-    falls back to the session default (None)."""
+    above it and capped relative to the session's cores, explicit
+    SPARK_GRAFT_SHUFFLE wins, and a missing events table falls back to the
+    session default (None)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -145,23 +146,22 @@ def test_streaming_state_partitions_sizing(tmp_path, monkeypatch):
 
     # the pure curves per state profile: commit-bound floor below ~2M rows,
     # state-scaled above, capped relative to cores (the measured ladders
-    # behind each, see the docstring); pin the core count so the asserts
-    # don't depend on the host
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
-    assert _streaming_partitions_for_rows(100_000) == 8       # sf0.1
-    assert _streaming_partitions_for_rows(1_000_000) == 8     # 10x
-    assert _streaming_partitions_for_rows(10_000_000) == 32   # 100x
-    assert _streaming_partitions_for_rows(100_000_000) == 128  # 1000x: 4x cap
-    assert _streaming_partitions_for_rows(10**9) == 128       # cap binds
+    # behind each, see the docstring); the core count is passed in, so the
+    # asserts don't depend on the host
+    f = _streaming_partitions_for_rows
+    assert f(100_000, cores=32) == 8       # sf0.1
+    assert f(1_000_000, cores=32) == 8     # 10x
+    assert f(10_000_000, cores=32) == 32   # 100x
+    assert f(100_000_000, cores=32) == 128  # 1000x: 4x cap
+    assert f(10**9, cores=32) == 128       # cap binds
     # join profile: same curve, capped at 1x cores (U-minimum at cores)
-    assert _streaming_partitions_for_rows(1_000_000, "join") == 8
-    assert _streaming_partitions_for_rows(100_000_000, "join") == 32
+    assert f(1_000_000, "join", cores=32) == 8
+    assert f(100_000_000, "join", cores=32) == 32
     # agg profile: partial combine makes width a pure commit multiplier
-    assert _streaming_partitions_for_rows(100_000_000, "agg") == 8
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "512")  # cluster-sized host
-    assert _streaming_partitions_for_rows(100_000_000, "insert_heavy") == 512
-    assert _streaming_partitions_for_rows(100_000_000, "join") == 512
-    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert f(100_000_000, "agg", cores=32) == 8
+    # cluster-sized session
+    assert f(100_000_000, "insert_heavy", cores=512) == 512
+    assert f(100_000_000, "join", cores=512) == 512
 
     monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
 
@@ -172,7 +172,7 @@ def test_streaming_state_partitions_sizing(tmp_path, monkeypatch):
         pa.table({"event_id": list(range(10))}),
         str(small / "events.parquet"),
     )
-    assert streaming_state_partitions(str(small)) == 8
+    assert streaming_state_partitions(str(small), cores=32) == 8
 
     # directory fixture (the scale ladder's layout): rows sum across parts
     big = tmp_path / "big"
@@ -182,17 +182,17 @@ def test_streaming_state_partitions_sizing(tmp_path, monkeypatch):
             pa.table({"event_id": list(range(5))}),
             str(big / "events.parquet" / f"part-0000{i}.parquet"),
         )
-    assert streaming_state_partitions(str(big)) == 8
+    assert streaming_state_partitions(str(big), cores=32) == 8
 
     # explicit shuffle override: the session already carries it, don't fight
     monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "16")
-    assert streaming_state_partitions(str(small)) is None
+    assert streaming_state_partitions(str(small), cores=32) is None
     monkeypatch.delenv("SPARK_GRAFT_SHUFFLE")
 
     # no events table -> keep the session default
     empty = tmp_path / "empty"
     empty.mkdir()
-    assert streaming_state_partitions(str(empty)) is None
+    assert streaming_state_partitions(str(empty), cores=32) is None
 
 
 def test_unknown_row_count_is_none_and_routes_to_parquet_sink(
@@ -365,7 +365,8 @@ def test_memory_sink_restores_shuffle_conf(spark, sf_smoke, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    assert streaming_state_partitions(sf_smoke) == 8
+    cores = spark.sparkContext.defaultParallelism
+    assert streaming_state_partitions(sf_smoke, cores=cores) == 8
     reg = load_all()
     df = reg["stream_dedup_state"].builder(spark, sf_smoke)
     assert df.count() > 0

@@ -9,12 +9,11 @@ drift": only same-host interleaved A/Bs are comparable).
 Usage:
     python tools/warm_probe.py <sf_dir> <qid> [qid ...]
 
-Env: SPARK_GRAFT_DRIVER_MEM (set 48g for >=100x fixtures), plus any
-operator knobs (read at import). Between passes the driver GCs so the
-ContextCleaner drops the previous pass's shuffle files - three passes
-of a large probe otherwise accumulate 30+ GB in /tmp/blockmgr-* (and a
-killed probe LEAVES those dirs: rm -rf /tmp/blockmgr-* /tmp/spark-*
-before relaunching).
+Env: SPARK_GRAFT_DRIVER_MEM (set 48g for >=100x fixtures). Between
+passes the driver GCs so the ContextCleaner drops the previous pass's
+shuffle files - three passes of a large probe otherwise accumulate 30+ GB
+in /tmp/blockmgr-* (and a killed probe LEAVES those dirs: rm -rf
+/tmp/blockmgr-* /tmp/spark-* before relaunching).
 """
 import gc
 import os
