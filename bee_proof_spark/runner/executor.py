@@ -8,9 +8,9 @@ Re-expresses the reference's execution core Spark-first:
   movement prints ``> Skipped!`` and returns 0 while DDL/commands still run
   and ALL SQL still parses + analyzes (ManifestRunner.java:85-134). Here
   dry-run is a first-class mode: DDL/commands execute via ``spark.sql``;
-  query/DML statements are validated through ``EXPLAIN EXTENDED`` (Catalyst
-  parse + analyze against the catalog, no execution - verified: EXPLAIN of
-  DML does not move data) and reported as skipped.
+  query/DML statements are parsed, analyzed against the catalog, optimized
+  and physically planned with command execution skipped (no job runs, no
+  data moves) and reported as skipped.
 - Output protocol parity: ``>>>>>>>> Processing:  <script>`` (:235),
   ``> Skipped!`` (:127), ``> Total time:  <ms>ms`` (:262), error text carries
   Spark's line/pos addressing (README.md:76 shows Hive's equivalent).
@@ -137,10 +137,6 @@ def _blank_literals_and_comments(sql: str) -> str:
             i += 1
     return "".join(out)
 
-#: Exception marker EXPLAIN EXTENDED embeds for analysis failures (observed
-#: Spark 4 behavior: the Analyzed section carries the exception text).
-_EXPLAIN_ERR_RE = re.compile(r"^(org\.apache\.spark\.[\w.]*Exception[^\n]*)", re.MULTILINE)
-
 
 def strip_leading_comments(sql: str) -> str:
     """Drop leading whitespace, ``--`` line comments, and ``/* */`` blocks."""
@@ -158,15 +154,20 @@ def strip_leading_comments(sql: str) -> str:
     return sql[i:]
 
 
+def _first_keyword(sql: str) -> str:
+    """The statement's first word past leading comments, upper-cased."""
+    words = strip_leading_comments(sql).split(None, 1)
+    return words[0].upper() if words else ""
+
+
 def classify(stmt: str) -> str:
     """Classify a statement: 'set' | 'command' | 'ddl' | 'exec'.
 
     'exec' statements are the ones Hive would run MR/move tasks for - blocked
     in dry-run. 'ddl'/'command' always execute (metastore/catalog effects only).
     """
-    stmt = strip_leading_comments(stmt)
-    first = stmt.lstrip().split(None, 1)[0].upper() if stmt.strip() else ""
-    if SetProcessor.matches(stmt):
+    first = _first_keyword(stmt)
+    if first == "SET":
         return "set"
     if first in {"ADD", "LIST", "RESET", "USE", "SHOW", "DESCRIBE", "DESC", "EXPLAIN",
                  "REFRESH", "CACHE", "UNCACHE"}:
@@ -315,33 +316,22 @@ class ScriptRunner:
 
     @staticmethod
     def _is_query(sql: str) -> bool:
-        stripped = strip_leading_comments(sql)
-        first = stripped.lstrip().split(None, 1)[0].upper() if stripped.strip() else ""
-        return first in {"SELECT", "WITH", "VALUES", "FROM", "TABLE", "MAP", "REDUCE"}
+        return _first_keyword(sql) in {"SELECT", "WITH", "VALUES", "FROM", "TABLE", "MAP", "REDUCE"}
 
     def _validate_only(self, sql: str) -> None:
-        """Parse + analyze without data movement (dry-run core).
+        """Parse, analyze, optimize and physically plan without running
+        anything (dry-run core).
 
-        EXPLAIN EXTENDED parses and analyzes against the catalog but executes
-        nothing; Spark embeds analysis failures in the output text instead of
-        raising, so we scan for the exception marker and surface it.
+        SKIP mode leaves the plan's commands (INSERT, CTAS) unexecuted, so no
+        job starts and no data moves. Failures raise the same PySpark
+        exceptions execute mode raises, at the user's own line/pos. Planning
+        is kept on purpose: DELETE, UPDATE and MERGE on a v1 table fail only
+        in the physical planner; an implicit cartesian product with
+        ``spark.sql.crossJoin.enabled=false`` fails only in the optimizer.
         """
-        from pyspark.errors import ParseException
-
-        try:
-            text = self.spark.sql(f"EXPLAIN EXTENDED {sql}").collect()[0][0]
-        except ParseException:
-            # Statement kind not EXPLAIN-wrappable (rare) - fall back to
-            # parse-only, which re-raises if the inner SQL itself is bad.
-            # ONLY parse errors take this fallback: an AnalysisException or
-            # infra error here is a real failure the dry-run must surface,
-            # not downgrade to parse-only (a bare except let dry-run print
-            # '> Skipped!' past statements whose analysis failed).
-            self.spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
-            return
-        m = _EXPLAIN_ERR_RE.search(text)
-        if m:
-            raise RuntimeError(m.group(1))
+        state = self.spark._jsparkSession.sessionState()
+        skip = self.spark._jvm.org.apache.spark.sql.execution.CommandExecutionMode.SKIP()
+        state.executePlan(state.sqlParser().parsePlan(sql), skip).assertSparkPlanPrepared()
 
     # -- per-manifest -------------------------------------------------------
 

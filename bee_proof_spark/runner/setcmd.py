@@ -55,10 +55,6 @@ class SetProcessor:
         #: in this session (None until then); 'true' restores it.
         self._saved_broadcast: str | None = None
 
-    @staticmethod
-    def matches(stmt: str) -> bool:
-        return _SET_RE.match(stmt) is not None
-
     def process(self, stmt: str) -> list[str]:
         """Handle a SET statement; returns printable output lines."""
         m = _SET_RE.match(stmt)

@@ -37,24 +37,6 @@ Methodology (self-adjudicating, round-3):
   runs line - a stall inside one pass is attributable to that pass from
   the artifact alone. Each bracket point is itself a MIN-OF-5 (r10
   verdict #3) behind a self-terminating priming loop (r11 verdict #3).
-- **Drift rule (r13, VERDICT r12 item 2 - the ONLY actionable signal):**
-  ``python tools/drift_screen.py <bench-line.json>`` - RAW per-query
-  floors, regime-corrected by the per-round MEDIAN ratio over shared
-  queries (every benched query acts as a control; a factor shared by
-  the whole set is the host moving, not the queries). A query is a
-  suspect only if it exceeds 1.2x its regime-corrected floor in every
-  prior same-sf round; suspects are adjudicated by interleaved
-  same-host A/B (SCALE.md protocol). ``calibration_bracket`` and
-  ``value_normalized`` (raw total / calibration floor) remain EMITTED
-  but are host-regime TELEMETRY ONLY - never a drift trigger and never
-  an adjudication target. Five consecutive cohorts (r8-r12) formed from
-  the normalized number were all noise: the calibration floor itself
-  fell monotonically 0.543 -> 0.297 across rounds on identical code
-  (page-cache/host regime), moving the denominator while every
-  suspect's raw floor hit all-time bests (SCALE.md ss-Round-12). The
-  former bracket max/min < 1.3 target is retired with it: the closing
-  bracket point keeps falling as the run itself warms the cache, which
-  is the same regime fact, not a measurement defect.
 - One-time family-checkpoint staging cost is a NAMED map (``staging``:
   pass-0 minus warm floor for every STAGING_QUERIES member - the queries
   whose first pass builds a family stage) instead of hiding inside
@@ -327,10 +309,8 @@ def main() -> None:
         "calibration": calib_floor,
         # min-of-5 floors at each bracket point (before pass 1 / between
         # passes / after pass 2 / after adjudication) — r10 verdict #3.
-        # HOST-REGIME TELEMETRY ONLY since r13 (module docstring): drift
-        # is adjudicated from RAW per-query floors vs each query's own
-        # best-raw history; neither the bracket spread nor
-        # value_normalized is an actionable signal.
+        # Host-regime telemetry only: neither the bracket spread nor
+        # value_normalized is an actionable regression signal.
         "calibration_bracket": calib,
         "value_normalized": round(sum(per_query.values()) / calib_floor, 2),
         # Parallelism contract, self-verifying from the artifact (r15,
