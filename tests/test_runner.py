@@ -259,41 +259,6 @@ def test_dry_run_catches_syntax_error(spark, runner_out):
         r.run_text("SELEC 1")
 
 
-@pytest.mark.parametrize(
-    "stmt, fragment",
-    [
-        ("SELECT nope FROM parity_t", "line 1 pos 7;"),
-        ("INSERT INTO parity_t SELECT 1", "\nData columns: `1`."),
-        ("SELEC 1", "(line 1, pos 0)\n\n== SQL ==\nSELEC 1\n"),
-        # raised only by the physical planner (v1 tables support none of them)
-        ("DELETE FROM parity_t WHERE a = 1", "does not support DELETE."),
-        ("UPDATE parity_t SET a = 2", "does not support UPDATE TABLE."),
-        ("MERGE INTO parity_t USING parity_t s ON parity_t.a = s.a WHEN MATCHED THEN DELETE",
-         "does not support MERGE INTO TABLE."),
-    ],
-    ids=["unknown-column", "insert-arity", "syntax", "delete-v1", "update-v1", "merge-v1"],
-)
-def test_dry_run_and_execute_report_the_same_error(spark, runner_out, tmp_path, stmt, fragment):
-    """Dry-run fails where execute fails, with the same line and the same
-    message: the user's own positions and SQL text, multi-line detail kept."""
-    lines, out = runner_out
-    spark.sql(f"CREATE TABLE parity_t (a INT, b STRING) USING parquet LOCATION '{tmp_path}/parity_t'")
-    script = f"SELECT 1 AS ok;\n{stmt};"
-    errors = {}
-    try:
-        for execute in (False, True):
-            with pytest.raises(StatementError) as ei:
-                ScriptRunner(spark, execute=execute, verbose=False, out=out).run_text(script)
-            errors[execute] = ei.value
-    finally:
-        spark.sql("DROP TABLE IF EXISTS parity_t")
-    dry, exe = errors[False], errors[True]
-    assert dry.line == exe.line == 2
-    assert dry.cause == exe.cause
-    assert "EXPLAIN" not in dry.cause
-    assert fragment in dry.cause
-
-
 def test_dry_run_catches_optimizer_only_error(spark, runner_out, tmp_path):
     """An implicit cartesian product with cross joins disabled is raised by
     the optimizer, not the analyzer; dry-run must still fail at its line."""
@@ -314,24 +279,6 @@ def test_dry_run_catches_optimizer_only_error(spark, runner_out, tmp_path):
     assert ei.value.line == 4
     assert "implicit cartesian product" in ei.value.cause
     assert lines == []
-
-
-def test_dry_run_internal_spark_api_resolves(spark):
-    """ScriptRunner._validate_only rests on Spark-internal API. Pin it so a
-    Spark upgrade that moves it fails here by name."""
-    try:
-        skip = spark._jvm.org.apache.spark.sql.execution.CommandExecutionMode.SKIP()
-        state = spark._jsparkSession.sessionState()
-        qe = state.executePlan(state.sqlParser().parsePlan("SELECT 1"), skip)
-        qe.assertSparkPlanPrepared()
-        mode = qe.mode().toString()
-    except Exception as ex:  # any failure here means the API moved
-        pytest.fail(
-            "ScriptRunner._validate_only needs CommandExecutionMode.SKIP, "
-            "sessionState().executePlan(plan, mode) and "
-            f"QueryExecution.assertSparkPlanPrepared(): {ex}"
-        )
-    assert mode == "SKIP", f"ScriptRunner._validate_only: executePlan ran in mode {mode}"
 
 
 def test_dry_run_starts_no_spark_job(spark, runner_out, tmp_path):
