@@ -532,6 +532,7 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bee_proof_spark.queries.scans import _scratch
     from bee_proof_spark.streaming import replay_events_stream
+    from bee_proof_spark.streaming.replay import _start
 
     # _scratch owns the (name, sf basename, pid) keying and fresh-dir reset;
     # resetting BOTH dirs keeps checkpoint and target in lockstep (a stale
@@ -566,14 +567,11 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = replay_events_stream(spark, sf_dir).select(
         "user_id", "ts", "event_type", "event_id"
     )
-    q = (
+    q = _start(
         stream.writeStream.foreachBatch(upsert)
-        .option(
-            "checkpointLocation",
-            chk,
-        )
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", chk)
+        .trigger(availableNow=True),
+        spark,
     )
     q.awaitTermination()
     shutil.rmtree(chk, ignore_errors=True)

@@ -33,8 +33,12 @@ from pyspark.sql.types import (
 #: see the stream_* docstrings) is untouched - while halving the per-batch
 #: fixed costs that dominate fixture-scale runs: one state-store commit per
 #: partition per batch, offset/commit WAL writes, and micro-batch planning.
-#: Measured (sf0.1, local[32], interleaved min-of-3): stream_dedup_state
-#: 2.99 s at 1 file/trigger vs 1.98 s at 2, identical 99058 emitted rows.
+#: Each commit and WAL write is a file rename, and under Spark's default
+#: checkpoint manager each rename forked a ``readlink`` process (see
+#: ``_CHECKPOINT_FILE_MANAGER``): that fork was the per-commit fixed cost.
+#: Measured under it (sf0.1, local[32], interleaved min-of-3):
+#: stream_dedup_state 2.99 s at 1 file/trigger vs 1.98 s at 2, identical
+#: 99058 emitted rows. The value is not re-tuned for the cheaper rename.
 #: A cluster backfill sizes the same knob (maxFilesPerTrigger /
 #: maxBytesPerTrigger) to its own throughput; 1-file batches are the
 #: degenerate setting, not the production one.
@@ -193,7 +197,9 @@ def _streaming_partitions_for_rows(
     - ``"agg"`` — windowed aggregation under partial (map-side) combine:
       the stateful shuffle carries window PARTIALS, so its volume is near
       decade-independent and width is purely a per-batch commit
-      multiplier (an fsync'd store delta per partition per batch).
+      multiplier (one store-delta rename per partition per batch, each of
+      which forked a ``readlink`` process under Spark's default checkpoint
+      manager; see ``_CHECKPOINT_FILE_MANAGER``).
       Measured flat-to-best at the floor of 8 at every decade
       (watermark-late 1000x ladder: 8.3 s @8, 10.1 @32, 15.0 @128,
       45.8 @512; sf0.1: 2.7 @8 vs 12.7 @32). Always 8.
@@ -213,6 +219,9 @@ def _streaming_partitions_for_rows(
     ``cores`` is the session's ``defaultParallelism``: the local core count
     here, total executor cores on a cluster, so every cap is
     parallelism-relative and grows with the deployment.
+
+    All three ladders were measured while every commit paid that fork; they
+    are not re-tuned for ``_CHECKPOINT_FILE_MANAGER``, so no plan moves.
     """
     import math
 
@@ -304,6 +313,45 @@ def _parquet_sink_dir() -> str:
     return os.path.join(mine, uuid.uuid4().hex[:12])
 
 
+#: Checkpoint manager for every stream this package starts. Spark's default
+#: for ``file:`` paths, FileContextBasedCheckpointFileManager, renames
+#: through AbstractFileSystem.renameInternal ->
+#: RawLocalFileSystem.getFileLinkStatus -> FileUtil.readLink, which forks a
+#: ``readlink`` process per rename when native libhadoop is absent: one fork
+#: per offset, commit, state-store delta and checksum file. This manager
+#: renames with FileSystem.rename (rename(2), atomic on a local disk) after
+#: its own exists check, so a no-overwrite commit keeps its guarantee, and
+#: the checksum files are still written.
+_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _start(writer, spark: SparkSession, state_partitions: int | None = None):
+    """Start ``writer`` under this package's stream conf and return the query.
+
+    The one place a stream's conf is set: the checkpoint manager above and,
+    when given, ``state_partitions`` as ``spark.sql.shuffle.partitions``.
+    The query clones the session while ``start()`` runs, so the caller's
+    values are back as soon as it returns; every batch still runs with the
+    values set here."""
+    conf = {"spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_FILE_MANAGER}
+    if state_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        return writer.start()
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def run_to_memory_sink(
     stream_df: DataFrame,
     output_mode: str = "append",
@@ -314,10 +362,10 @@ def run_to_memory_sink(
     sink contents as a DataFrame.
 
     ``state_partitions`` (usually ``streaming_state_partitions(sf_dir)``)
-    overrides ``spark.sql.shuffle.partitions`` for the lifetime of the
-    streaming query only: the count is read at stream-start planning time,
-    baked into the (ephemeral) checkpoint, and restored before returning,
-    so surrounding batch work keeps the corpus-sized session default.
+    is the streaming query's ``spark.sql.shuffle.partitions``: ``_start``
+    sets it only while the query starts, the count is baked into the
+    (ephemeral) checkpoint, and surrounding batch work keeps the
+    corpus-sized session default.
 
     ``input_rows`` (usually ``events_row_count(sf_dir)``) picks the sink:
     append-mode streams over >= ``_PARQUET_SINK_ROWS`` input rows write to
@@ -335,44 +383,39 @@ def run_to_memory_sink(
         output_mode == "append"  # file sinks only support append
         and (input_rows is None or input_rows >= _PARQUET_SINK_ROWS)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        if to_parquet:
-            path = _parquet_sink_dir()
-            q = (
-                stream_df.writeStream.format("parquet")
-                .option("path", path)
-                .option("checkpointLocation", f"{path}.ckpt")
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            # Detect the zero-output case EXPLICITLY (no data files under
-            # the sink dir) instead of a bare except that would also mask
-            # genuine read failures - bad path, permissions, corrupt
-            # footers - as a silently-empty stream (r5 ADVICE). Any real
-            # read error now propagates.
-            committed = any(
-                f.endswith(".parquet") or f.startswith("part-")
-                for _, _, files in os.walk(path)
-                for f in files
-            )
-            if not committed:
-                return spark.createDataFrame([], stream_df.schema)
-            return spark.read.schema(stream_df.schema).parquet(path)
-        name = f"bps_sink_{uuid.uuid4().hex[:8]}"
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
+    if to_parquet:
+        path = _parquet_sink_dir()
+        q = _start(
+            stream_df.writeStream.format("parquet")
+            .option("path", path)
+            .option("checkpointLocation", f"{path}.ckpt")
             .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
+            spark,
+            state_partitions,
         )
         q.awaitTermination()
-        return spark.table(name)
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        # Detect the zero-output case EXPLICITLY (no data files under
+        # the sink dir) instead of a bare except that would also mask
+        # genuine read failures - bad path, permissions, corrupt
+        # footers - as a silently-empty stream (r5 ADVICE). Any real
+        # read error now propagates.
+        committed = any(
+            f.endswith(".parquet") or f.startswith("part-")
+            for _, _, files in os.walk(path)
+            for f in files
+        )
+        if not committed:
+            return spark.createDataFrame([], stream_df.schema)
+        return spark.read.schema(stream_df.schema).parquet(path)
+    name = f"bps_sink_{uuid.uuid4().hex[:8]}"
+    q = _start(
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True),
+        spark,
+        state_partitions,
+    )
+    q.awaitTermination()
+    return spark.table(name)

@@ -8,6 +8,7 @@ must be dropped, so the emitted count differs from the batch answer.
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
@@ -354,23 +355,146 @@ def test_dedup_state_evicts_expired_buckets(spark, sf_smoke):
     assert spark.table("evict_probe_sink").count() == expected
 
 
-def test_memory_sink_restores_shuffle_conf(spark, sf_smoke, monkeypatch):
-    """run_to_memory_sink's state_partitions override is scoped to the
-    stream: the session's shuffle default is restored afterwards."""
+def test_stream_start_leaves_session_conf_and_runs_at_state_width(
+    spark, sf_smoke, monkeypatch
+):
+    """The stream helper sets its conf only around ``start()``: once the
+    builder returns, the session's shuffle width and checkpoint manager are
+    what they were, yet every batch's state operator ran at the requested
+    width (the query clones the session inside ``start()``)."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
     from bee_proof_spark.queries import load_all
     from bee_proof_spark.streaming import streaming_state_partitions
 
     # the ==8 assertion below reads the real sizing path; an inherited
     # SPARK_GRAFT_SHUFFLE would override it and fail spuriously (r5 ADVICE)
     monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.checkpointFileManagerClass",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    # a session already at 8 would make the width check below vacuous
+    assert before["spark.sql.shuffle.partitions"] != "8"
     cores = spark.sparkContext.defaultParallelism
     assert streaming_state_partitions(sf_smoke, cores=cores) == 8
-    reg = load_all()
-    df = reg["stream_dedup_state"].builder(spark, sf_smoke)
+
+    class Listener(StreamingQueryListener):
+        def __init__(self) -> None:
+            self.progress: list[dict] = []
+            self.terminated: list[str] = []
+
+        def onQueryStarted(self, event) -> None:
+            pass
+
+        def onQueryProgress(self, event) -> None:
+            self.progress.append(json.loads(event.progress.json))
+
+        def onQueryIdle(self, event) -> None:
+            pass
+
+        def onQueryTerminated(self, event) -> None:
+            self.terminated.append(str(event.runId))
+
+    listener = Listener()
+    spark.streams.addListener(listener)
+    try:
+        df = load_all()["stream_dedup_state"].builder(spark, sf_smoke)
+        assert {k: spark.conf.get(k, None) for k in keys} == before
+        # listener events arrive asynchronously, in order: once the stream's
+        # termination is seen, so is every one of its progress reports
+        deadline = time.monotonic() + 60
+        while not listener.terminated and time.monotonic() < deadline:
+            time.sleep(0.05)
+    finally:
+        spark.streams.removeListener(listener)
     assert df.count() > 0
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert len(listener.terminated) == 1
+    batches = [p for p in listener.progress if p["runId"] == listener.terminated[0]]
+    widths = [op["numShufflePartitions"] for p in batches for op in p["stateOperators"]]
+    assert batches and len(widths) == len(batches)
+    assert set(widths) == {8}
+
+
+def test_restart_resumes_from_its_checkpoint(spark, tmp_path):
+    """A second AvailableNow run on the same checkpointLocation finds every
+    offset committed: it reads 0 rows and emits nothing new. Pins the round
+    trip of the offset, commit and state logs through the checkpoint
+    manager the stream helper installs."""
+    from bee_proof_spark.streaming.replay import _start
+
+    src, out, chk = (str(tmp_path / d) for d in ("src", "out", "chk"))
+    spark.range(100).selectExpr("id", "id % 7 AS k").write.parquet(src)
+
+    def run():
+        q = _start(
+            spark.readStream.schema("id long, k long")
+            .parquet(src)
+            .dropDuplicates(["k"])
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", chk)
+            .trigger(availableNow=True),
+            spark,
+            state_partitions=3,
+        )
+        q.awaitTermination()
+        return sum(p["numInputRows"] for p in q.recentProgress)
+
+    def sink_files():
+        return sorted(f for f in os.listdir(out) if f.startswith("part-"))
+
+    assert run() == 100
+    files, rows = sink_files(), spark.read.parquet(out).count()
+    assert files and rows == 7
+    assert run() == 0
+    assert sink_files() == files
+    assert spark.read.parquet(out).count() == rows
+
+
+def test_every_stream_starts_through_the_helper():
+    """Every ``.writeStream`` in the package is built inside the first
+    argument of a ``_start(...)`` call, in one of the helper's callers, and
+    only the helper calls ``.start()`` on a stream writer. So the checkpoint
+    manager and the state width are set in one place; a stream started any
+    other way would silently go back to Spark's fork-per-rename default."""
+    import ast
+    import pathlib
+
+    import bee_proof_spark
+
+    callers = {
+        ("replay.py", "run_to_memory_sink"),
+        ("streaming_batch.py", "stream_foreach_batch_upsert"),
+    }
+    pkg = pathlib.Path(bee_proof_spark.__file__).parent
+    writers, starts = set(), set()
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        in_start = {
+            n
+            for c in ast.walk(tree)
+            if isinstance(c, ast.Call) and getattr(c.func, "id", None) == "_start"
+            for n in ast.walk(c.args[0])
+        }
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Attribute):
+                continue
+            fn = n
+            while fn in parent and not isinstance(fn, ast.FunctionDef):
+                fn = parent[fn]
+            where = (path.name, getattr(fn, "name", "<module>"))
+            if n.attr == "writeStream":
+                writers.add((*where, n in in_start))
+            # the runner's regex m.start() calls are not streams
+            elif n.attr in ("start", "toTable") and (
+                "writeStream" in ast.unparse(n.value) or where[1] == "_start"
+            ):
+                starts.add((*where, ast.unparse(n)))
+    assert writers == {(*c, True) for c in callers}
+    assert starts == {("replay.py", "_start", "writer.start")}
 
 
 def test_session_gap_boundary_exact_gap_merges(spark):
