@@ -2,8 +2,9 @@
 own operators (SURVEY.md section 2-A, A1-A12).
 
 - ``manifest``      : JSON manifest + task model (FakeEmrManifest.java:50-86).
-- ``splitter``      : quote/comment-aware HQL statement splitting
-                      (CliDriver.processFile semantics).
+- ``splitter``      : the one HQL lexer: statement splitting
+                      (CliDriver.processFile semantics), literal/comment
+                      blanking and leading-comment stripping.
 - ``substitution``  : ${VAR} / ${hivevar:} / ${hiveconf:} / ${env:} injection
                       (ManifestRunner.java:234).
 - ``setcmd``        : SET interception incl. the EMR conf-name shim

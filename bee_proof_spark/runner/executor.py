@@ -24,33 +24,15 @@ from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
-from bee_proof_spark.runner.comments import skip_block_comment
 from bee_proof_spark.runner.release_gates import violations as release_violations
 from bee_proof_spark.runner.setcmd import SetProcessor
-from bee_proof_spark.runner.splitter import Statement, split_statements
+from bee_proof_spark.runner.splitter import (
+    Statement,
+    blank_literals_and_comments as _blank_literals_and_comments,
+    split_statements,
+    strip_leading_comments,
+)
 from bee_proof_spark.runner.substitution import substitute
-
-
-class _SessionConfView:
-    """``${hiveconf:...}`` resolution source: in-script SET overrides first,
-    then the LIVE Spark session conf - the same order Hive's substitution
-    uses and this runner's own ``SET hiveconf:key`` display path already
-    implements (setcmd.py). Without the fallback the two paths disagreed:
-    display printed the session value, substitution left the reference
-    verbatim."""
-
-    def __init__(self, local: dict[str, str], spark: SparkSession):
-        self._local = local
-        self._spark = spark
-
-    def get(self, key: str, default: str | None = None) -> str | None:
-        if key in self._local:
-            return self._local[key]
-        try:
-            val = self._spark.conf.get(key, None)
-        except Exception:
-            val = None
-        return default if val is None else val
 
 
 class StatementError(RuntimeError):
@@ -77,85 +59,9 @@ _CTAS_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 
-_LITERAL_RE = re.compile(r"'(?:[^'\\]|\\.|'')*'|\"(?:[^\"\\]|\\.)*\"|`[^`]*`")
-
-
-def _blank_literals_and_comments(sql: str) -> str:
-    """Blank literal contents AND ``--``/``/* */`` comments with spaces.
-
-    One left-to-right scan so the two syntaxes can't fool each other: a
-    ``--`` inside a string literal is not a comment, and a quote inside a
-    comment does not open a literal. Newlines are kept inside comments AND
-    inside literals/backtick identifiers so line numbers (and ``\\s*``
-    matches across them) survive. Used for the
-    CTAS classification: ``CREATE TABLE t AS -- note\\nSELECT ...`` must
-    still classify as exec (the comment sits between AS and the query
-    keyword), while ``COMMENT 'same as the daily select'`` must not.
-    """
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c in ("'", '"'):
-            m = _LITERAL_RE.match(sql, i)
-            if m:
-                # Keep newlines inside the literal (like comments below) so
-                # release-gate line offsets stay correct past a multi-line
-                # string; every other char blanks to a space.
-                body = m.group(0)[1:-1]
-                out.append(c + "".join(ch if ch == "\n" else " " for ch in body) + c)
-                i = m.end()
-                continue
-            out.append(c)
-            i += 1
-        elif c == "`":
-            j = sql.find("`", i + 1)
-            if j >= 0:
-                body = sql[i + 1 : j]
-                out.append("`" + "".join(ch if ch == "\n" else " " for ch in body) + "`")
-                i = j + 1
-                continue
-            out.append(c)
-            i += 1
-        elif sql.startswith("--", i):
-            j = sql.find("\n", i)
-            j = n if j < 0 else j
-            out.append(" " * (j - i))
-            i = j
-        elif sql.startswith("/*", i):
-            # Nesting-aware (Spark's lexer): 'CREATE TABLE t AS
-            # /* a /* b */ c */ SELECT ...' must blank the WHOLE comment -
-            # a first-'*/' scan would leave ' c */' live between AS and
-            # SELECT and misclassify the CTAS as ddl, a statement that
-            # moves data under dry-run.
-            j = skip_block_comment(sql, i)
-            seg = sql[i:j]
-            out.append("".join(ch if ch == "\n" else " " for ch in seg))
-            i = j
-        else:
-            out.append(c)
-            i += 1
-    return "".join(out)
-
 #: Exception marker EXPLAIN EXTENDED embeds for analysis failures (observed
 #: Spark 4 behavior: the Analyzed section carries the exception text).
 _EXPLAIN_ERR_RE = re.compile(r"^(org\.apache\.spark\.[\w.]*Exception[^\n]*)", re.MULTILINE)
-
-
-def strip_leading_comments(sql: str) -> str:
-    """Drop leading whitespace, ``--`` line comments, and ``/* */`` blocks."""
-    i, n = 0, len(sql)
-    while i < n:
-        if sql[i].isspace():
-            i += 1
-        elif sql.startswith("--", i):
-            j = sql.find("\n", i)
-            i = n if j < 0 else j + 1
-        elif sql.startswith("/*", i):
-            i = skip_block_comment(sql, i)
-        else:
-            break
-    return sql[i:]
 
 
 def _first_keyword(sql: str) -> str:
@@ -245,11 +151,7 @@ class ScriptRunner:
             # SET hivevar:NAME=... executed earlier in THIS script.
             merged_vars = {**(variables or {}), **self.setproc.variables}
             try:
-                sub = substitute(
-                    stmt.text,
-                    merged_vars,
-                    _SessionConfView(self.setproc.local_conf, self.spark),
-                )
+                sub = substitute(stmt.text, merged_vars, self.setproc)
             except Exception as ex:  # cyclic/over-deep expansion fails the script
                 raise StatementError(
                     script_name, stmt.line, stmt.text, str(ex)

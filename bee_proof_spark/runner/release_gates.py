@@ -18,11 +18,12 @@ release knowledge):
   CREATE TEMPORARY TABLE (HIVE-7090, 0.14), CURRENT_DATE/CURRENT_TIMESTAMP
   keywords (HIVE-5472, 1.2).
 
-Detection runs on literal-and-comment-blanked statement text (the executor's
-scanner) so ``COMMENT 'use nullif here'`` or a ``-- TODO: INTERSECT``
-comment can never trip a gate, while real constructs always do. Violations
-carry a line offset within the statement so the runner's error is
-line-addressed like the reference's Hive parse errors (README.md:76).
+Detection runs on literal-and-comment-blanked statement text
+(``splitter.blank_literals_and_comments``) so ``COMMENT 'use nullif here'``
+or a ``-- TODO: INTERSECT`` comment can never trip a gate, while real
+constructs always do. Violations carry a line offset within the statement
+so the runner's error is line-addressed like the reference's Hive parse
+errors (README.md:76).
 """
 
 from __future__ import annotations
@@ -165,7 +166,7 @@ def violations(blanked_sql: str, release: str) -> list[tuple[str, str, int]]:
     """Gate violations for a statement under a release's Hive pin.
 
     ``blanked_sql`` must already have literal/comment contents blanked
-    (executor._blank_literals_and_comments). Returns
+    (splitter.blank_literals_and_comments). Returns
     ``[(construct, message, line_offset), ...]`` ordered by position;
     line_offset is 0-based lines from the statement start to the match.
     """

@@ -55,6 +55,19 @@ class SetProcessor:
         #: in this session (None until then); 'true' restores it.
         self._saved_broadcast: str | None = None
 
+    def get(self, key: str, default: str | None = None) -> str | None:
+        """The one conf lookup behind ``SET key`` display and
+        ``${hiveconf:key}`` substitution: SET overrides first, then the live
+        Spark conf, whose unset keys read as their defaults. A key neither
+        knows gives ``default``."""
+        if key in self.local_conf:
+            return self.local_conf[key]
+        try:
+            val = self.spark.conf.get(key)  # None for an unset optional key
+        except Exception:  # a key Spark does not know
+            val = None
+        return default if val is None else val
+
     def process(self, stmt: str) -> list[str]:
         """Handle a SET statement; returns printable output lines."""
         m = _SET_RE.match(stmt)
@@ -78,13 +91,7 @@ class SetProcessor:
             # 'SET hiveconf:k' reads the same key 'SET hiveconf:k=v' wrote
             # (apply() strips the namespace prefix before storing).
             lookup = key[len("hiveconf:"):] if key.startswith("hiveconf:") else key
-            val = self.local_conf.get(lookup)
-            if val is None:
-                try:
-                    val = self.spark.conf.get(lookup)
-                except Exception:
-                    val = "<undefined>"
-            return [f"{key}={val}"]
+            return [f"{key}={self.get(lookup, '<undefined>')}"]
 
         key, _, value = rest.partition("=")
         key, value = key.strip(), value.strip()

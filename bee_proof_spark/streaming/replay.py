@@ -418,4 +418,8 @@ def run_to_memory_sink(
         state_partitions,
     )
     q.awaitTermination()
-    return spark.table(name)
+    # The DataFrame keeps the sink's rows; the view would keep them for the
+    # session's life, one per build.
+    df = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return df

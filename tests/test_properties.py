@@ -12,7 +12,11 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from bee_proof_spark.runner.splitter import split_statements
+from bee_proof_spark.runner.splitter import (
+    blank_literals_and_comments,
+    split_statements,
+    strip_leading_comments,
+)
 from bee_proof_spark.runner.substitution import substitute
 
 # ------------------------------------------------------------------ splitter
@@ -50,6 +54,33 @@ def test_comment_only_scripts_yield_nothing(body):
     clean = body.replace("\n", " ")
     script = f"-- {clean}\n/* {clean} */\n"
     assert split_statements(script) == []
+
+
+#: Every char or pair that opens, closes or escapes a lexical region, so
+#: random text hits unterminated strings and comments, '/*/', a trailing
+#: backslash and the like.
+lex_text = st.lists(
+    st.sampled_from(
+        ["'", '"', "`", ";", "-", "--", "/*", "*/", "/", "*", "\n", "\\", "a", "SELECT", "''", " "]
+    ),
+    max_size=30,
+).map("".join)
+
+
+@given(lex_text)
+@settings(max_examples=300, deadline=None)
+def test_lexer_passes_hold_on_any_text(text):
+    """The three passes over the one lexer: blanking keeps the length and
+    every newline; stripping leaves a suffix that starts at neither
+    whitespace nor a comment; no statement is empty."""
+    blanked = blank_literals_and_comments(text)
+    assert len(blanked) == len(text)
+    newlines = [i for i, c in enumerate(text) if c == "\n"]
+    assert [i for i, c in enumerate(blanked) if c == "\n"] == newlines
+    rest = strip_leading_comments(text)
+    assert text.endswith(rest)
+    assert not rest[:1].isspace() and not rest.startswith(("--", "/*"))
+    assert all(s.text for s in split_statements(text))
 
 
 @st.composite

@@ -214,6 +214,36 @@ def test_set_hivevar_display_sees_manifest_variables(spark, runner_out):
     assert lines == ["hivevar:T=set-wins"]
 
 
+@pytest.mark.parametrize(
+    "key, value",
+    [
+        ("bps.set.key", "from-set"),  # SET in the script
+        ("spark.bps.session.key", "from-session"),  # set on the session
+        ("spark.sql.optimizer.maxIterations", "100"),  # unset, has a default
+        ("bps.unknown.key", None),  # unknown to both
+    ],
+)
+def test_set_display_and_hiveconf_substitution_agree(spark, runner_out, key, value):
+    """'SET hiveconf:key' prints what '${hiveconf:key}' substitutes; an
+    unknown key prints <undefined> and its reference stays verbatim."""
+    lines, out = runner_out
+    r = ScriptRunner(spark, execute=True, verbose=False, out=out)
+    spark.conf.set("spark.bps.session.key", "from-session")
+    try:
+        r.run_text(
+            f"SET bps.set.key=from-set; SET hiveconf:{key}; "
+            f"SELECT '${{hiveconf:{key}}}' AS v"
+        )
+    finally:
+        spark.conf.unset("spark.bps.session.key")
+    shown, substituted = lines
+    if value is None:
+        assert shown == f"hiveconf:{key}=<undefined>"
+        assert substituted == f"${{hiveconf:{key}}}"
+    else:
+        assert (shown, substituted) == (f"hiveconf:{key}={value}", value)
+
+
 # ---------------------------------------------------------------- executor
 
 @pytest.fixture
@@ -609,6 +639,27 @@ def test_release_gate_literals_and_comments_do_not_trip(spark, runner_out):
         "SELECT 'use nullif(a,b) here' AS note; /* EXCEPT */ SELECT 2 AS two;"
     )
     assert lines.count("> Skipped!") == 2
+
+
+def test_unterminated_literal_never_trips_a_release_gate(spark, runner_out):
+    """An unterminated string runs to the end of the text in every lexical
+    pass, so a gated keyword inside it is string text: no gate fires, and
+    the statement fails at its own line on Spark's parse error instead."""
+    from pyspark.errors import ParseException
+
+    from bee_proof_spark.runner.executor import _blank_literals_and_comments
+    from bee_proof_spark.runner.release_gates import violations
+
+    sql = "SELECT 'oops INTERSECT SELECT 2"
+    assert violations(_blank_literals_and_comments(sql), "emr-3") == []
+    lines, out = runner_out
+    r = ScriptRunner(spark, execute=False, verbose=False, out=out, release="emr-3")
+    with pytest.raises(StatementError) as ei:
+        r.run_text(f"SELECT 1 AS one;\n{sql}")
+    assert ei.value.line == 2
+    assert isinstance(ei.value.__cause__, ParseException)
+    assert "release gate" not in ei.value.cause
+    assert lines == ["> Skipped!"]
 
 
 def test_release_gate_applies_in_execute_mode(spark, runner_out):

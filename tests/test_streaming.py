@@ -417,6 +417,18 @@ def test_stream_start_leaves_session_conf_and_runs_at_state_width(
     assert set(widths) == {8}
 
 
+def test_memory_sink_leaves_no_view(spark, sf_smoke):
+    """The memory sink's temp view is dropped once the DataFrame is taken:
+    two builds leave no ``bps_sink_*`` view, and each result still reads
+    the sink's rows."""
+    from bee_proof_spark.queries import load_all
+
+    build = load_all()["stream_dedup_state"].builder
+    first, second = build(spark, sf_smoke), build(spark, sf_smoke)
+    assert [t.name for t in spark.catalog.listTables() if t.name.startswith("bps_sink_")] == []
+    assert first.count() == second.count() > 0
+
+
 def test_restart_resumes_from_its_checkpoint(spark, tmp_path):
     """A second AvailableNow run on the same checkpointLocation finds every
     offset committed: it reads 0 rows and emits nothing new. Pins the round
