@@ -17,10 +17,19 @@ silent-null casts - Spark 4 defaults ANSI on), session timezone UTC.
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import re
 import shutil
+import subprocess
 import tempfile
+import time
+import warnings
 
+from pyspark import SparkContext
+from pyspark.errors import PySparkRuntimeError
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 TMP_ROOT = "bee-proof-tmp"
@@ -161,8 +170,6 @@ def build_session(
         # broadcast for an unrelated caller sharing the session). Keys the
         # caller explicitly passed via extra_conf are applied without the
         # mutation warning - the caller asked for exactly those.
-        import warnings
-
         explicit = set(extra_conf or ())
         mutated: list[str] = []
         for k, v in conf.items():
@@ -198,19 +205,197 @@ def build_session(
             )
         return active
 
-    builder = SparkSession.builder.appName(app_name).master(master)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    def builder(launch_conf: dict[str, str]) -> SparkSession.Builder:
+        b = SparkSession.builder.appName(app_name).master(master)
+        for k, v in launch_conf.items():
+            b = b.config(k, v)
+        return b
+
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return builder(conf).getOrCreate()
+    return _launch_with_class_archive(builder, conf)
+
+
+#: Launch-only JVM options the class-data archive flags are merged into.
+#: Spark puts them before ``spark.driver.extraJavaOptions`` on the driver's
+#: command line, so a caller's extraJavaOptions from any source (extra_conf,
+#: ``--conf`` in PYSPARK_SUBMIT_ARGS) keep working beside the archive flags.
+_JAVA_OPTS_KEY = "spark.driver.defaultJavaOptions"
+
+#: How long interpreter exit waits for the JVM to write its archive (measured:
+#: about 13 s). The wait is needed: a JVM left to dump after this process
+#: exits is one a caller may SIGKILL mid-write.
+_DUMP_TIMEOUT_S = 60
+
+
+def _class_archive_path(spark_home: str, driver_memory: str) -> str | None:
+    """Where the archive for this launch lives, or None if it cannot.
+
+    A per-user cache dir, not the tmp root: reset_tmp_tree() and a per-run
+    TMPDIR would discard the archive before any later launch could map it.
+    The dir also holds the empty conf dir the launch puts on the classpath.
+    """
+    cache = os.environ.get("XDG_CACHE_HOME", "")
+    if not os.path.isabs(cache):
+        cache = os.path.join(os.path.expanduser("~"), ".cache")
+    cds = os.path.join(cache, "bee-proof-spark", "cds")
+    # the JVM splits options on whitespace, expands % in ErrorFile and
+    # reads ':' in SharedArchiveFile as a second archive
+    if not re.fullmatch(r"[\w./+-]+", cds):
+        return None
+    try:
+        os.makedirs(os.path.join(cds, "conf"), exist_ok=True)
+        key = _class_archive_key(spark_home, driver_memory)
+    except OSError:
+        return None
+    return os.path.join(cds, f"spark-{key}.jsa") if os.access(cds, os.W_OK) else None
+
+
+def _class_archive_key(spark_home: str, driver_memory: str) -> str:
+    """Fingerprint of what a dynamic archive is valid for: the JDK build,
+    Spark's jars, and compressed oops (heap under 32 GB).
+
+    The caller's java options stay out of it: a per-run -Djava.io.tmpdir
+    would give every run its own archive, dumped and never reused.
+    """
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if java is None:
+        raise FileNotFoundError("java")
+    java = os.path.realpath(java)
+    libjvm = os.stat(os.path.join(os.path.dirname(os.path.dirname(java)), "lib", "server", "libjvm.so"))
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", driver_memory.strip().lower())
+    small_heap = bool(m) and int(m[1]) << {"k": 10, "m": 20, "g": 30, "t": 40}[m[2] or "m"] < 32 << 30
+    with os.scandir(os.path.join(spark_home, "jars")) as it:
+        jars = sorted((e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in it)
+    parts = [java, libjvm.st_size, libjvm.st_mtime_ns, small_heap, jars]
+    return hashlib.sha256(repr(parts).encode()).hexdigest()[:16]
+
+
+def _plain_launch_reason(spark_home: str) -> str | None:
+    """Why the driver's classpath cannot be pinned to the archive's, if so.
+
+    The JVM maps an archive only under the classpath it was dumped with, and
+    refuses to dump with a non-empty directory on it, so the launch swaps the
+    conf dir for an empty one. That is sound only while Spark would read
+    nothing from the real one (``*.template`` files are never read) and no
+    other directory joins the classpath.
+    """
+    for var in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH"):
+        if os.environ.get(var):
+            return f"{var} is set"
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    try:
+        used = sorted(n for n in os.listdir(conf_dir) if not n.endswith(".template"))
+    except FileNotFoundError:
+        return None
+    return f"{conf_dir} holds {used[0]}" if used else None
+
+
+def _launch_with_class_archive(builder, conf: dict[str, str]) -> SparkSession:
+    """Launch the driver JVM from a dynamic class-data-sharing archive.
+
+    With an archive for the current key the JVM maps Spark's parsed classes
+    from it instead of reading ~11k classes from jars (JEP 350). Without one
+    it dumps one at exit, published only if the JVM exits cleanly: a
+    truncated archive crashes the next JVM instead of being ignored.
+    """
+    spark_home = _find_spark_home()
+    reason = _plain_launch_reason(spark_home)
+    if reason is not None:
+        warnings.warn(
+            f"build_session: starting the JVM without a class-data archive because {reason}",
+            stacklevel=3,
+        )
+        return builder(conf).getOrCreate()
+    archive = _class_archive_path(spark_home, conf["spark.driver.memory"])
+    if archive is None:
+        return builder(conf).getOrCreate()
+    cds = os.path.dirname(archive)
+    dump = None
+    if os.path.exists(archive):
+        flag = f"-XX:SharedArchiveFile={archive}"
+    else:
+        dump = f"{archive}.{os.getpid()}-{time.monotonic_ns()}.tmp"
+        flag = f"-XX:ArchiveClassesAtExit={dump}"
+    # The cds selectors keep the dump's warnings off the JVM's stdout (the
+    # runner's output protocol, bench.py's result line); a JVM that crashes
+    # on a damaged archive writes its error log to the cache, not the cwd.
+    opts = f"{flag} -Xlog:cds=off -Xlog:cds+dynamic=off -XX:ErrorFile={cds}/hs_err_pid%p.log"
+    launch_conf = dict(conf)
+    launch_conf[_JAVA_OPTS_KEY] = " ".join(filter(None, (conf.get(_JAVA_OPTS_KEY), opts)))
+    caller_conf_dir = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = os.path.join(cds, "conf")
+    try:
+        spark = builder(launch_conf).getOrCreate()
+    except PySparkRuntimeError as ex:
+        if ex.getCondition() != "JAVA_GATEWAY_EXITED":
+            raise
+        spark = None
+    finally:
+        if caller_conf_dir is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = caller_conf_dir
+    if spark is None:
+        try:
+            os.unlink(dump or archive)
+        except FileNotFoundError:
+            pass
+        warnings.warn(
+            f"build_session: the JVM did not start with {flag}; removed the "
+            "archive, starting without a class-data archive",
+            stacklevel=3,
+        )
+        return builder(conf).getOrCreate()
+    if dump is not None:
+        atexit.register(_publish_class_archive, SparkContext._gateway.proc, dump, archive)
+    return spark
+
+
+def _publish_class_archive(proc, dump: str, archive: str) -> None:
+    """At interpreter exit: end the JVM, let it write its archive, and
+    publish the archive only if the JVM exited 0, with a rename that never
+    replaces another process's archive."""
+    proc.stdin.close()  # the gateway exits on EOF
+    try:
+        code = proc.wait(timeout=_DUMP_TIMEOUT_S)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        code = proc.wait()
+    try:
+        if code == 0:
+            os.link(dump, archive)
+            _prune_class_archives(os.path.dirname(archive), archive)
+    except OSError:
+        pass  # no dump written, or another process published first
+    finally:
+        if os.path.exists(dump):
+            os.unlink(dump)
+
+
+def _prune_class_archives(cds: str, keep: str) -> None:
+    """Remove archives of other keys, and temp dumps and crash logs older
+    than an hour (leftovers of killed runs)."""
+    now = time.time()
+    with os.scandir(cds) as it:
+        for e in it:
+            if e.is_file() and e.path != keep and (
+                    e.name.endswith(".jsa") or e.stat().st_mtime < now - 3600):
+                os.unlink(e.path)
 
 
 def reset_tmp_tree(base_dir: str | None = None) -> str:
-    """Delete and recreate the ephemeral warehouse/scratch tree.
+    """Empty and recreate the run's warehouse, scratch and logs dirs.
 
     Mirrors the per-run directory reset at ManifestRunner.java:172-175.
+    The rest of the tmp root is left alone: it holds other processes' live
+    pid-owned dirs and shared snapshots (sinks, familystage, stream-src,
+    bucketed), each reclaimed by its owner's own age and liveness sweep.
     """
     base = base_dir or os.path.join(tempfile.gettempdir(), TMP_ROOT)
-    shutil.rmtree(base, ignore_errors=True)
     for sub in ("warehouse", "scratch", "logs"):
-        os.makedirs(os.path.join(base, sub), exist_ok=True)
+        path = os.path.join(base, sub)
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path, exist_ok=True)
     return base

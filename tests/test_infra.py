@@ -432,3 +432,24 @@ def test_build_session_honors_spark_graft_cpus(tmp_path):
         capture_output=True, text=True, env=env, timeout=300, check=True,
     )
     assert out.stdout.strip().splitlines()[-1] == "2"
+
+
+def test_reset_tmp_tree_keeps_other_processes_dirs(tmp_path):
+    """Resetting the run's tree empties the warehouse but leaves what other
+    processes own under the tmp root: a live pid's sink dir and a complete
+    stream-replay snapshot."""
+    import os
+
+    from bee_proof_spark.session import reset_tmp_tree
+
+    base = tmp_path / "bee-proof-tmp"
+    sink = base / "sinks" / f"pid{os.getpid()}" / "q"
+    snapshot = base / "stream-src" / "fixture-snap"
+    for d in (sink, snapshot, base / "warehouse" / "t"):
+        d.mkdir(parents=True)
+    (snapshot / "_SUCCESS").touch()
+    assert reset_tmp_tree(str(base)) == str(base)
+    assert sink.is_dir()
+    assert (snapshot / "_SUCCESS").exists()
+    assert os.listdir(base / "warehouse") == []
+    assert (base / "scratch").is_dir() and (base / "logs").is_dir()
