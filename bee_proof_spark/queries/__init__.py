@@ -22,11 +22,16 @@ Determinism discipline (FIXTURES.md "Timezone / hashing"):
 
 from __future__ import annotations
 
+import os
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
+
+from bee_proof_spark.tmputil import tree_bytes
 
 TABLES = (
     "region",
@@ -65,8 +70,136 @@ def register(qid: str, oracle: str | None = None, doc: str = ""):
     return deco
 
 
+#: Parquet confs that change the schema Spark infers from the same footers.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+class TableInfo:
+    """Catalog facts about one fixture table - the statistics a warehouse
+    metastore serves without a scan or a job: on-disk size, footer row and
+    row-group counts, and the Spark-inferred schema. Each fact is computed
+    on first use and kept, behind the entry's lock.
+
+    ``key`` is the table path's ``(st_mtime_ns, st_size)``;
+    :func:`table_info` replaces the entry when it changes. A directory's
+    mtime moves when a commit renames files in or out of it, but a file
+    rewritten in place INSIDE a directory table is not seen: fixture tables
+    are immutable per process (TESTDATA.md), the contract the family cache
+    relies on too.
+
+    ``rows`` and ``row_groups`` read footers only, each data file's at most
+    once, and are ``None`` when any footer they reach is unreadable (or the
+    table has no data file) - never a partial count. Sizing decisions that
+    key off them must not guess small (a too-small guess is how a
+    selectivity knob reverts to its fixture default on a 100 TB corpus);
+    callers take the safe branch on unknown instead.
+    """
+
+    def __init__(self, path: str, key: tuple[int, int] | None):
+        self.path = path
+        self.key = key
+        self._lock = threading.Lock()
+        self._bytes: int | None = None
+        self._files: list[str] | None = None
+        self._footers: dict[str, tuple[int, int] | None] = {}
+        self._schemas: dict[tuple, StructType] = {}
+
+    @property
+    def bytes(self) -> int:
+        """Compressed size: every file under the path, ``.crc`` and
+        ``_SUCCESS`` included - the table size plan-time gates (pre-
+        aggregation, memory-vs-disk staging cutovers) compare against."""
+        with self._lock:
+            if self._bytes is None:
+                self._bytes = tree_bytes(self.path)
+            return self._bytes
+
+    @property
+    def rows(self) -> int | None:
+        """Row count summed over every data file's footer."""
+        return self._footer_sum(0)
+
+    def row_groups(self, stop_at: int | None = None) -> int | None:
+        """Parquet row groups across the data files: the hard ceiling on
+        scan-stage parallelism (a row group is parquet's smallest
+        independently readable unit, so no Spark split setting raises scan
+        parallelism past it).
+
+        ``stop_at`` bounds the footer pass for a gate that only needs to
+        know whether the count clears a threshold: counting stops once it
+        reaches ``stop_at`` and returns that lower bound, so a 100 TB table
+        (~1e5 files) pays no O(files) footer pass for a boolean. A later
+        call with a larger ``stop_at``, or none, opens only the footers not
+        read yet."""
+        return self._footer_sum(1, stop_at)
+
+    def _footer_sum(self, field: int, stop_at: int | None = None) -> int | None:
+        import pyarrow.parquet as pq
+
+        n = None
+        with self._lock:
+            if self._files is None:
+                self._files = [self.path] if os.path.isfile(self.path) else [
+                    os.path.join(root, f)
+                    for root, _, files in os.walk(self.path)
+                    for f in files
+                    if f.endswith(".parquet") or f.startswith("part-")
+                ]
+            for p in self._files:
+                if p not in self._footers:
+                    try:
+                        md = pq.ParquetFile(p).metadata
+                        self._footers[p] = (md.num_rows, md.num_row_groups)
+                    except Exception:
+                        self._footers[p] = None
+                if self._footers[p] is None:
+                    return None
+                n = (n or 0) + self._footers[p][field]
+                if stop_at is not None and n >= stop_at:
+                    break
+        return n
+
+    def schema(self, spark: SparkSession) -> StructType:
+        """The schema Spark infers for the table under ``spark``'s parquet
+        inference confs, inferred once per tuple of their values. Inference
+        starts a Spark job; a read through the kept schema starts none."""
+        confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+        with self._lock:
+            if confs not in self._schemas:
+                self._schemas[confs] = spark.read.parquet(self.path).schema
+            return self._schemas[confs]
+
+
+#: Table path (absolute) -> its catalog entry.
+_CATALOG: dict[str, TableInfo] = {}
+_CATALOG_LOCK = threading.Lock()
+
+
+def table_info(sf_dir: str, name: str) -> TableInfo:
+    """The catalog entry of one fixture table (TESTDATA.md: one parquet file
+    or directory per table), after one ``os.stat`` of its path. A missing
+    table gets an entry keyed ``None``: size 0, unknown rows."""
+    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
+    try:
+        st = os.stat(path)
+        key = (st.st_mtime_ns, st.st_size)
+    except OSError:
+        key = None
+    with _CATALOG_LOCK:
+        info = _CATALOG.get(path)
+        if info is None or info.key != key:
+            info = _CATALOG[path] = TableInfo(path, key)
+        return info
+
+
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table (TESTDATA.md: one parquet file per table).
+    """Load one fixture table through its catalog entry: the read carries
+    the schema :meth:`TableInfo.schema` inferred once, so it starts no
+    schema-inference job.
 
     ``events.ts`` is written as parquet TIMESTAMP(NANOS), which Spark rejects
     by default (PARQUET_TYPE_ILLEGAL) while DuckDB truncates to micros. We
@@ -78,135 +211,14 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     LongType branch is conditional - a session that already read the
     schema differently keeps working.
     """
+    info = table_info(sf_dir, name)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType
-
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if isinstance(df.schema["ts"].dataType, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def table_bytes(sf_dir: str, name: str) -> int:
-    """Compressed on-disk size of one fixture table (file or directory).
-
-    Plan-time size heuristics (pre-aggregation gates, memory-vs-disk
-    staging cutovers) key off this: it is the same statistic a warehouse
-    catalog exposes as table size, available without running a job.
-    """
-    import os
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isfile(path):
-        try:
-            return os.path.getsize(path)
-        except OSError:
-            return 0
-    total = 0
-    for root, _, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
-
-
-def table_rows(sf_dir: str, name: str) -> int | None:
-    """Row count of one fixture table from parquet FOOTERS only (no scan) -
-    the statistic a warehouse catalog exposes as table row count. Returns
-    ``None`` when any footer is unreadable: sizing decisions that key off
-    this must not silently guess small (a too-small guess is how a
-    selectivity knob reverts to its fixture default on a 100 TB corpus -
-    the exact failure the caller exists to prevent); callers surface the
-    unknown instead."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isfile(path):
-        paths = [path]
-    else:
-        paths = [
-            os.path.join(root, f)
-            for root, _, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet") or f.startswith("part-")
-        ]
-    if not paths:
-        return None
-    rows = 0
-    for p in paths:
-        try:
-            rows += pq.ParquetFile(p).metadata.num_rows
-        except Exception:
-            return None
-    return rows
-
-
-#: (sf_dir, name) -> (row-group count, complete), cached per process
-#: (fixture dirs are immutable per process, TESTDATA.md - same contract the
-#: family cache relies on). count None = a footer was unreadable (treat as
-#: unknown); complete False = the count stopped early at a caller's
-#: ``stop_at`` and is a LOWER BOUND, not the table total.
-_SPLITS_CACHE: dict[tuple[str, str], tuple[int | None, bool]] = {}
-
-
-def scan_splits(sf_dir: str, name: str, stop_at: int | None = None) -> int | None:
-    """Parquet row groups across the table's files, from footers only: the
-    hard ceiling on scan-stage parallelism. A row group is parquet's
-    smallest independently readable unit - byte-range splits below one row
-    group assign the group to a single task and decode nothing in the
-    others, so no Spark split setting can raise scan parallelism past this
-    number. ``None`` when any footer is unreadable (callers must treat
-    unknown conservatively, exactly like :func:`table_rows`).
-
-    ``stop_at`` bounds the driver-side metadata pass (r14 verdict item 2):
-    the spread gate only needs to know whether the count clears a
-    threshold, so counting stops - mid-walk, before opening further
-    footers - once it reaches ``stop_at`` and returns the partial count (a
-    lower bound, which is >= the threshold, exactly what the gate needs).
-    Without it a 100 TB table (~1e5 files) paid an O(files) footer pass per
-    process for a boolean. Partial counts are cached as lower bounds and
-    upgraded in place when a later caller needs more (a larger ``stop_at``
-    or the exact total)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    key = (sf_dir, name)
-    if key in _SPLITS_CACHE:
-        n, complete = _SPLITS_CACHE[key]
-        if complete or n is None or (stop_at is not None and n >= stop_at):
-            return n
-    path = os.path.join(sf_dir, f"{name}.parquet")
-
-    def parquet_files():
-        if os.path.isfile(path):
-            yield path
-            return
-        for root, _, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet") or f.startswith("part-"):
-                    yield os.path.join(root, f)
-
-    n: int | None = None
-    complete = True
-    for p in parquet_files():
-        try:
-            n = (n or 0) + pq.ParquetFile(p).metadata.num_row_groups
-        except Exception:
-            n = None
-            break
-        if stop_at is not None and n >= stop_at:
-            complete = False  # lower bound: enough for the caller's gate
-            break
-    _SPLITS_CACHE[key] = (n, complete if n is not None else True)
-    return n
+    schema = info.schema(spark)
+    df = spark.read.schema(schema).parquet(info.path)
+    if name == "events" and isinstance(schema["ts"].dataType, LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
 
 
 def spread_scan(
@@ -238,7 +250,7 @@ def spread_scan(
     cores = spark.sparkContext.defaultParallelism
     threshold = max(cores // 2, 2)
     # stop_at bounds the footer pass: the gate only needs n >= threshold.
-    splits = scan_splits(sf_dir, name, stop_at=threshold)
+    splits = table_info(sf_dir, name).row_groups(stop_at=threshold)
     if splits is None or splits >= threshold:
         return df
     return df.repartition(cores, key) if key else df.repartition(cores)

@@ -21,7 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bee_proof_spark.queries import register, spread_scan, table_bytes, tbl
+from bee_proof_spark.queries import register, spread_scan, table_info, tbl
 
 # ------------------------------------------------------------------ helpers
 
@@ -207,7 +207,7 @@ def _family_checkpoint(
         cutover = (
             _DISK_STAGE_EMB_BYTES if source == "embeddings" else _DISK_STAGE_DOC_BYTES
         )
-        if table_bytes(sf_dir, source) >= cutover:
+        if table_info(sf_dir, source).bytes >= cutover:
             # big corpus: stage to parquet (see _DISK_STAGE_DOC_BYTES). The
             # _SUCCESS check makes the stage restart-safe within a pid; a
             # half-written dir from a killed run is overwritten whole.
@@ -1661,13 +1661,11 @@ def ext_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured floors in SCALE.md r6."""
     from pyspark.sql import Window
 
-    from bee_proof_spark.queries import table_rows
-
     import numpy as np
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    n = table_rows(sf_dir, "embeddings")
+    n = table_info(sf_dir, "embeddings").rows
     p = _emb_lsh_planes_for(n)
 
     # Arrow-vectorized bucket computation: ONE float64 BLAS matmul per
@@ -2135,7 +2133,7 @@ def ext_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tbl(spark, sf_dir, "documents")
     toks = F.ceil(F.col("n_chars") / 4.0).cast("bigint")
     pack = lambda cum: F.floor((cum - toks) / 2048).cast("bigint").alias("pack_id")  # noqa: E731
-    if table_bytes(sf_dir, "documents") < _PACK_BAND_BYTES:
+    if table_info(sf_dir, "documents").bytes < _PACK_BAND_BYTES:
         w = (
             Window.partitionBy("lang")
             .orderBy("doc_id")

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bee_proof_spark.queries import dsum, o_dsum, register, tbl
+from bee_proof_spark.queries import dsum, o_dsum, register, table_info, tbl
 
 
 @register(
@@ -147,7 +147,6 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     Windows covering the last hour of data stay in state (unemitted),
     exactly as a live pipeline would leave them pending."""
     from bee_proof_spark.streaming import (
-        events_row_count,
         replay_events_stream,
         run_to_memory_sink,
         streaming_state_partitions,
@@ -160,15 +159,13 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("window.start").cast("string").alias("window_start"), "n_events")
     )
-    # one footer walk serves both the state sizer and the sink gate
-    _rows = events_row_count(sf_dir)
     return run_to_memory_sink(
         windowed,
         output_mode="append",
         state_partitions=streaming_state_partitions(
-            sf_dir, "agg", rows=_rows, cores=spark.sparkContext.defaultParallelism
+            sf_dir, "agg", cores=spark.sparkContext.defaultParallelism
         ),
-        input_rows=_rows,
+        input_rows=table_info(sf_dir, "events").rows,
     )
 
 
@@ -208,7 +205,6 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     row survives inside a batch is engine-arbitrary, the key set is
     not)."""
     from bee_proof_spark.streaming import (
-        events_row_count,
         replay_events_stream,
         run_to_memory_sink,
         streaming_state_partitions,
@@ -225,15 +221,13 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("hour").cast("string").alias("hour_start"),
         )
     )
-    # one footer walk serves both the state sizer and the sink gate
-    _rows = events_row_count(sf_dir)
     return run_to_memory_sink(
         deduped,
         output_mode="append",
         state_partitions=streaming_state_partitions(
-            sf_dir, "insert_heavy", rows=_rows, cores=spark.sparkContext.defaultParallelism
+            sf_dir, "insert_heavy", cores=spark.sparkContext.defaultParallelism
         ),
-        input_rows=_rows,
+        input_rows=table_info(sf_dir, "events").rows,
     )
 
 
@@ -261,7 +255,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical enrich-clicks-with-impressions shape.
     """
     from bee_proof_spark.streaming import (
-        events_row_count,
         replay_events_stream,
         run_to_memory_sink,
         streaming_state_partitions,
@@ -298,15 +291,13 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_ts").cast("string").alias("click_ts"),
         F.col("v_ts").cast("string").alias("view_ts"),
     )
-    # one footer walk serves both the state sizer and the sink gate
-    _rows = events_row_count(sf_dir)
     return run_to_memory_sink(
         joined,
         output_mode="append",
         state_partitions=streaming_state_partitions(
-            sf_dir, "join", rows=_rows, cores=spark.sparkContext.defaultParallelism
+            sf_dir, "join", cores=spark.sparkContext.defaultParallelism
         ),
-        input_rows=_rows,
+        input_rows=table_info(sf_dir, "events").rows,
     )
 
 
@@ -391,7 +382,6 @@ def stream_session_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from bee_proof_spark.streaming import (
-        events_row_count,
         replay_events_stream,
         run_to_memory_sink,
         streaming_state_partitions,
@@ -484,15 +474,13 @@ def stream_session_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    # one footer walk serves both the state sizer and the sink gate
-    _rows = events_row_count(sf_dir)
     return run_to_memory_sink(
         sessions,
         output_mode="append",
         state_partitions=streaming_state_partitions(
-            sf_dir, "insert_heavy", rows=_rows, cores=spark.sparkContext.defaultParallelism
+            sf_dir, "insert_heavy", cores=spark.sparkContext.defaultParallelism
         ),
-        input_rows=_rows,
+        input_rows=table_info(sf_dir, "events").rows,
     )
 
 

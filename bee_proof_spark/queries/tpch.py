@@ -19,7 +19,7 @@ from bee_proof_spark.queries import (
     o_dsum,
     register,
     spread_scan,
-    table_bytes,
+    table_info,
     tbl,
 )
 
@@ -246,7 +246,7 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_returnflag") == "R")
         .select("l_orderkey")
     )
-    if table_bytes(sf_dir, "lineitem") >= _Q4_PROBE_DEDUP_BYTES:
+    if table_info(sf_dir, "lineitem").bytes >= _Q4_PROBE_DEDUP_BYTES:
         returned = returned.distinct()
     return (
         orders.join(returned, orders.o_orderkey == returned.l_orderkey, "left_semi")

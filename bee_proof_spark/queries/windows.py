@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bee_proof_spark.queries import register, table_bytes, tbl
+from bee_proof_spark.queries import register, table_info, tbl
 
 #: partition by customer, order by (date, key) - total order within partition.
 _W_ORDER = "PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey"
@@ -124,7 +124,7 @@ def win_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense_rank both equal row_number, which banding computes exactly.
     """
     o = _orders(spark, sf_dir).select("o_orderkey", "o_orderstatus", "o_totalprice")
-    if table_bytes(sf_dir, "orders") < _BANDED_RANK_BYTES:
+    if table_info(sf_dir, "orders").bytes < _BANDED_RANK_BYTES:
         w = Window.partitionBy("o_orderstatus").orderBy(
             F.desc("o_totalprice"), F.asc("o_orderkey")
         )
@@ -163,7 +163,7 @@ def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     37.9 s -> banded at 1000x (SCALE.md r5).
     """
     o = _orders(spark, sf_dir).select("o_orderkey", "o_orderstatus", "o_totalprice")
-    if table_bytes(sf_dir, "orders") < _BANDED_RANK_BYTES:
+    if table_info(sf_dir, "orders").bytes < _BANDED_RANK_BYTES:
         w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
         return o.select("o_orderkey", F.ntile(4).over(w).alias("quartile"))
     k = 4
@@ -206,7 +206,7 @@ def win_percent_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson), which places the gate at 32 MB of compressed fact.
     """
     o = _orders(spark, sf_dir).select("o_orderkey", "o_orderstatus", "o_totalprice")
-    if table_bytes(sf_dir, "orders") < _BANDED_RANK_BYTES:
+    if table_info(sf_dir, "orders").bytes < _BANDED_RANK_BYTES:
         w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
         return o.select(
             "o_orderkey",

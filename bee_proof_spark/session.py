@@ -32,6 +32,8 @@ from pyspark.errors import PySparkRuntimeError
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
+from bee_proof_spark.tmputil import tree_bytes
+
 TMP_ROOT = "bee-proof-tmp"
 
 
@@ -51,14 +53,7 @@ def auto_shuffle_partitions(data_dir: str | None = None) -> int:
     """
     if not data_dir or not os.path.isdir(data_dir):
         return 32
-    total = 0
-    for root, _, files in os.walk(data_dir):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return _partitions_for_bytes(total)
+    return _partitions_for_bytes(tree_bytes(data_dir))
 
 
 def _partitions_for_bytes(total: int) -> int:
@@ -227,6 +222,10 @@ _JAVA_OPTS_KEY = "spark.driver.defaultJavaOptions"
 #: exits is one a caller may SIGKILL mid-write.
 _DUMP_TIMEOUT_S = 60
 
+#: Age past which a file in the archive dir is a killed run's leftover: a
+#: temp dump or crash log to prune, or a dump lock to take over.
+_LEFTOVER_AGE_S = 3600
+
 
 def _class_archive_path(spark_home: str, driver_memory: str) -> str | None:
     """Where the archive for this launch lives, or None if it cannot.
@@ -315,9 +314,13 @@ def _launch_with_class_archive(builder, conf: dict[str, str]) -> SparkSession:
     dump = None
     if os.path.exists(archive):
         flag = f"-XX:SharedArchiveFile={archive}"
-    else:
+    elif _take_dump_lock(f"{archive}.lock"):
         dump = f"{archive}.{os.getpid()}-{time.monotonic_ns()}.tmp"
         flag = f"-XX:ArchiveClassesAtExit={dump}"
+    else:
+        # another process is dumping this key's archive; a second dump
+        # would only be thrown away
+        return builder(conf).getOrCreate()
     # The cds selectors keep the dump's warnings off the JVM's stdout (the
     # runner's output protocol, bench.py's result line); a JVM that crashes
     # on a damaged archive writes its error log to the cache, not the cwd.
@@ -326,22 +329,21 @@ def _launch_with_class_archive(builder, conf: dict[str, str]) -> SparkSession:
     launch_conf[_JAVA_OPTS_KEY] = " ".join(filter(None, (conf.get(_JAVA_OPTS_KEY), opts)))
     caller_conf_dir = os.environ.get("SPARK_CONF_DIR")
     os.environ["SPARK_CONF_DIR"] = os.path.join(cds, "conf")
+    spark = None
     try:
         spark = builder(launch_conf).getOrCreate()
     except PySparkRuntimeError as ex:
         if ex.getCondition() != "JAVA_GATEWAY_EXITED":
             raise
-        spark = None
     finally:
         if caller_conf_dir is None:
             del os.environ["SPARK_CONF_DIR"]
         else:
             os.environ["SPARK_CONF_DIR"] = caller_conf_dir
+        if dump is not None and spark is None:
+            _remove(f"{archive}.lock")
     if spark is None:
-        try:
-            os.unlink(dump or archive)
-        except FileNotFoundError:
-            pass
+        _remove(dump or archive)
         warnings.warn(
             f"build_session: the JVM did not start with {flag}; removed the "
             "archive, starting without a class-data archive",
@@ -353,10 +355,41 @@ def _launch_with_class_archive(builder, conf: dict[str, str]) -> SparkSession:
     return spark
 
 
+def _take_dump_lock(lock: str) -> bool:
+    """Claim the one dump of an archive key, by creating ``lock``.
+
+    A lock younger than ``_LEFTOVER_AGE_S`` belongs to a process that is
+    dumping now: False. An older one is a killed run's leftover and is taken
+    over (two processes taking over at once may both dump; publishing keeps
+    the first archive and discards the other).
+    """
+    for _ in range(2):
+        try:
+            os.close(os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+            return True
+        except FileExistsError:
+            try:
+                if time.time() - os.stat(lock).st_mtime < _LEFTOVER_AGE_S:
+                    return False
+                os.unlink(lock)
+            except FileNotFoundError:
+                pass
+        except OSError:
+            return False
+    return False
+
+
+def _remove(path: str) -> None:
+    try:
+        os.unlink(path)
+    except FileNotFoundError:
+        pass
+
+
 def _publish_class_archive(proc, dump: str, archive: str) -> None:
     """At interpreter exit: end the JVM, let it write its archive, and
     publish the archive only if the JVM exited 0, with a rename that never
-    replaces another process's archive."""
+    replaces another process's archive. The dump lock goes either way."""
     proc.stdin.close()  # the gateway exits on EOF
     try:
         code = proc.wait(timeout=_DUMP_TIMEOUT_S)
@@ -370,8 +403,8 @@ def _publish_class_archive(proc, dump: str, archive: str) -> None:
     except OSError:
         pass  # no dump written, or another process published first
     finally:
-        if os.path.exists(dump):
-            os.unlink(dump)
+        _remove(dump)
+        _remove(f"{archive}.lock")
 
 
 def _prune_class_archives(cds: str, keep: str) -> None:
@@ -381,7 +414,7 @@ def _prune_class_archives(cds: str, keep: str) -> None:
     with os.scandir(cds) as it:
         for e in it:
             if e.is_file() and e.path != keep and (
-                    e.name.endswith(".jsa") or e.stat().st_mtime < now - 3600):
+                    e.name.endswith(".jsa") or e.stat().st_mtime < now - _LEFTOVER_AGE_S):
                 os.unlink(e.path)
 
 

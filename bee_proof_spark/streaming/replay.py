@@ -25,6 +25,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from bee_proof_spark.queries import table_info, tbl
+
 #: Files ingested per micro-batch when replaying the 4-file snapshot.
 #: 2 keeps the replay MULTI-batch - the watermark still advances mid-stream
 #: (batch 2 runs under batch 1's watermark), so bucket eviction and
@@ -63,22 +65,17 @@ def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs a fixed schema, so we re-materialize the (ns -> us converted) batch
     table as a one-off parquet snapshot and stream from that.
     """
-    from bee_proof_spark.queries import tbl
-
-    # Snapshot key includes a layout version and the source file's
-    # (mtime, size) fingerprint: changed fixture data, a different directory
-    # with the same basename, or a new replay layout each produce a fresh
-    # snapshot path instead of silently replaying a stale one.
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        st = os.stat(src)
-        # ns-resolution mtime: an in-test fixture rebuilt twice within the
-        # same wall-clock second at an equal byte size must not collapse to
-        # the same snapshot (1-second truncation did exactly that)
-        fp = f"v2-{st.st_mtime_ns}-{st.st_size}"
-    except OSError:
-        fp = "v2-unknown"
     import hashlib
+
+    # Snapshot key includes a layout version and the events table's catalog
+    # key, (mtime_ns, size): changed fixture data, a different directory
+    # with the same basename, or a new replay layout each produce a fresh
+    # snapshot path instead of silently replaying a stale one. ns-resolution
+    # mtime: an in-test fixture rebuilt twice within the same wall-clock
+    # second at an equal byte size must not collapse to the same snapshot
+    # (1-second truncation did exactly that).
+    key = table_info(sf_dir, "events").key
+    fp = "v2-%d-%d" % key if key else "v2-unknown"
 
     # abspath hash, not basename: basename('') on a trailing-slash sf_dir
     # (and same-named sibling fixture dirs) collapsed the namespace onto
@@ -233,11 +230,8 @@ def _streaming_partitions_for_rows(
     return min(2 ** round(math.log2(raw)), cap)
 
 
-_UNSET = object()
-
-
 def streaming_state_partitions(
-    sf_dir: str, profile: str = "insert_heavy", rows=_UNSET, *, cores: int
+    sf_dir: str, profile: str = "insert_heavy", *, cores: int
 ) -> int | None:
     """Shuffle-partition count for STATEFUL streaming queries, sized to the
     events corpus and the operator's state ``profile`` — or None to keep
@@ -262,26 +256,10 @@ def streaming_state_partitions(
     """
     if os.environ.get("SPARK_GRAFT_SHUFFLE"):
         return None
-    if rows is _UNSET:  # caller may pass a precomputed events_row_count
-        rows = events_row_count(sf_dir)
+    rows = table_info(sf_dir, "events").rows
     if not rows:  # None (unknown) or 0 (empty) -> keep the session default
         return None
     return _streaming_partitions_for_rows(rows, profile, cores=cores)
-
-
-def events_row_count(sf_dir: str) -> int | None:
-    """Row count of the events fixture from parquet FOOTERS only (no scan);
-    a cluster deployment reads the same number from catalog stats. ``None``
-    when the table is missing or ANY footer is unreadable: a partial count
-    is worse than no count (one unreadable part file in a 100M-row fixture
-    could undercount below ``_PARQUET_SINK_ROWS``), and 0 would be
-    indistinguishable from an empty table. Callers treat None as "unknown"
-    and size conservatively (``run_to_memory_sink`` routes unknown-size
-    append streams to the parquet sink, never the driver-collect memory
-    sink). Delegates to the shared ``table_rows`` footer walk."""
-    from bee_proof_spark.queries import table_rows
-
-    return table_rows(sf_dir, "events")
 
 
 #: Input-rows threshold above which an append-mode stream sinks to parquet
@@ -367,7 +345,8 @@ def run_to_memory_sink(
     (ephemeral) checkpoint, and surrounding batch work keeps the
     corpus-sized session default.
 
-    ``input_rows`` (usually ``events_row_count(sf_dir)``) picks the sink:
+    ``input_rows`` (usually the events table's catalog ``rows``) picks the
+    sink:
     append-mode streams over >= ``_PARQUET_SINK_ROWS`` input rows write to
     a scratch parquet table (the memory sink is a driver collect and hits
     driver.maxResultSize at the third probe decade); everything else uses

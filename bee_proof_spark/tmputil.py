@@ -1,4 +1,5 @@
-"""Shared /tmp hygiene: age-based reclamation of scratch/snapshot dirs.
+"""Shared file-tree helpers: the size of a tree, and age-based reclamation
+of scratch/snapshot dirs.
 
 Two call sites (sink scratch dirs in queries/scans.py, stream-replay
 snapshots in streaming/replay.py) reclaim other runs' leftovers. The rules
@@ -17,6 +18,24 @@ import os
 import shutil
 import time
 from collections.abc import Callable, Iterable
+
+
+def tree_bytes(path: str) -> int:
+    """Sum of the sizes of every file at or under ``path`` (0 if missing).
+    Files that vanish mid-walk count 0."""
+    if os.path.isfile(path):
+        try:
+            return os.path.getsize(path)
+        except OSError:
+            return 0
+    total = 0
+    for root, _, files in os.walk(path):
+        for f in files:
+            try:
+                total += os.path.getsize(os.path.join(root, f))
+            except OSError:
+                pass
+    return total
 
 
 def sweep_aged_dirs(

@@ -154,3 +154,44 @@ def test_real_conf_dir_launches_plainly_and_is_read(tmp_path):
     assert out.stderr.count(PLAIN) == 1
     assert "spark-defaults.conf" in out.stderr
     assert not os.path.exists(_cds(tmp_path))
+
+
+def test_a_fresh_dump_lock_launches_plainly_and_a_stale_one_is_taken_over(tmp_path, monkeypatch):
+    """While another process holds the key's dump lock, a launch neither
+    dumps nor maps an archive. A lock two hours old is a killed run's
+    leftover: the launch takes it over, dumps, publishes, and removes it."""
+    import time
+
+    from pyspark.find_spark_home import _find_spark_home
+
+    from bee_proof_spark.session import _class_archive_path
+
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    archive = _class_archive_path(_find_spark_home(), "1g")
+    lock = f"{archive}.lock"
+    open(lock, "w").close()
+
+    def launch(name: str) -> dict[str, str]:
+        cwd = tmp_path / name
+        cwd.mkdir()
+        out = subprocess.run(
+            [sys.executable, "-c", _PROBE, REPO, str(tmp_path / "wh")],
+            cwd=cwd, env=_env(tmp_path), capture_output=True, text=True, timeout=300, check=True)
+        return dict(line.split(" ", 1) for line in out.stdout.splitlines() if " " in line)
+
+    plain = launch("fresh-lock")
+    assert plain["rows"] == "1"
+    assert "ArchiveClassesAtExit" not in plain.get("java_opts", "")
+    assert "SharedArchiveFile" not in plain.get("java_opts", "")
+    assert glob.glob(os.path.join(_cds(tmp_path), "*.tmp")) == []
+    assert glob.glob(os.path.join(_cds(tmp_path), "*.jsa")) == []
+    assert os.path.exists(lock)
+
+    old = time.time() - 2 * 3600
+    os.utime(lock, (old, old))
+    dumped = launch("stale-lock")
+    assert dumped["rows"] == "1"
+    assert "ArchiveClassesAtExit" in dumped["java_opts"]
+    assert glob.glob(os.path.join(_cds(tmp_path), "*.jsa")) == [archive]
+    assert glob.glob(os.path.join(_cds(tmp_path), "*.tmp")) == []
+    assert not os.path.exists(lock)

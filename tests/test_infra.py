@@ -3,6 +3,7 @@ profile helpers must fail loudly, not mask defects (round-2 advice items)."""
 
 from __future__ import annotations
 
+import os
 import warnings
 
 import duckdb
@@ -237,13 +238,13 @@ def test_emb_lsh_planes_self_size(monkeypatch, tmp_path):
     assert ps == sorted(ps)  # monotone in corpus size
     with _pytest.raises(RuntimeError):
         f(None)
-    # unreadable footers -> table_rows None -> the raise above, never P=8
-    from bee_proof_spark.queries import table_rows
+    # unreadable footers -> catalog rows None -> the raise above, never P=8
+    from bee_proof_spark.queries import table_info
 
     bad = tmp_path / "embeddings.parquet"
     bad.write_bytes(b"not parquet")
-    assert table_rows(str(tmp_path), "embeddings") is None
-    assert table_rows(str(tmp_path), "missing") is None
+    assert table_info(str(tmp_path), "embeddings").rows is None
+    assert table_info(str(tmp_path), "missing").rows is None
     monkeypatch.setattr(X, "_EMB_LSH_PLANES_PIN", 20)
     assert f(None) == 20  # a pin needs no row count
     assert f(10**9) == 20
@@ -332,7 +333,7 @@ def test_spread_scan_gates_on_layout(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from bee_proof_spark.queries import scan_splits, spread_scan
+    from bee_proof_spark.queries import spread_scan, table_info
 
     cores = spark.sparkContext.defaultParallelism
     rows = pa.table({"id": list(range(200)), "v": [float(i) for i in range(200)]})
@@ -343,8 +344,8 @@ def test_spread_scan_gates_on_layout(spark, tmp_path):
     pq.write_table(rows, one / "narrow.parquet")  # 1 row group
     pq.write_table(rows, many / "narrow.parquet", row_group_size=5)  # 40 groups
 
-    assert scan_splits(str(one), "narrow") == 1
-    assert scan_splits(str(many), "narrow") >= max(cores // 2, 2)
+    assert table_info(str(one), "narrow").row_groups() == 1
+    assert table_info(str(many), "narrow").row_groups() >= max(cores // 2, 2)
 
     spread = spread_scan(spark, str(one), "narrow", "id")
     plain = spread_scan(spark, str(many), "narrow", "id")
@@ -359,8 +360,24 @@ def test_spread_scan_gates_on_layout(spark, tmp_path):
     assert spread.count() == plain.count() == 200
 
 
+def _count_footer_opens(monkeypatch) -> list[str]:
+    """Patch pyarrow's ParquetFile to record the path of every footer opened."""
+    import pyarrow.parquet as pq
+
+    opened: list[str] = []
+    real = pq.ParquetFile
+
+    class CountingParquetFile(real):
+        def __init__(self, p, *a, **kw):
+            opened.append(str(p))
+            super().__init__(p, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", CountingParquetFile)
+    return opened
+
+
 def test_scan_splits_early_exit_bounds_footer_reads(tmp_path, monkeypatch):
-    """scan_splits(stop_at=k) must stop opening parquet footers the moment
+    """row_groups(stop_at=k) must stop opening parquet footers the moment
     the running count reaches k (r14 verdict item 2: at 100 TB the gate's
     O(files) metadata pass was pure driver waste - it only needs a
     threshold boolean), and the cached partial count must (a) serve later
@@ -377,33 +394,160 @@ def test_scan_splits_early_exit_bounds_footer_reads(tmp_path, monkeypatch):
     for i in range(20):  # 20 files x 1 row group each
         pq.write_table(rows, table_dir / f"part-{i:05d}.parquet")
 
-    opened: list[str] = []
-    real = pq.ParquetFile
+    opened = _count_footer_opens(monkeypatch)
+    Q._CATALOG.pop(str(table_dir), None)
 
-    class CountingParquetFile(real):
-        def __init__(self, p, *a, **kw):
-            opened.append(str(p))
-            super().__init__(p, *a, **kw)
-
-    monkeypatch.setattr(pq, "ParquetFile", CountingParquetFile)
-    Q._SPLITS_CACHE.pop((str(tmp_path), "wide"), None)
-
-    got = Q.scan_splits(str(tmp_path), "wide", stop_at=4)
+    got = Q.table_info(str(tmp_path), "wide").row_groups(stop_at=4)
     assert got is not None and 4 <= got < 20  # lower bound, not the total
     assert len(opened) == 4  # exactly stop_at footers opened
 
     # cached lower bound serves an equal-or-smaller gate with ZERO reads
     opened.clear()
-    assert Q.scan_splits(str(tmp_path), "wide", stop_at=4) >= 4
-    assert Q.scan_splits(str(tmp_path), "wide", stop_at=2) >= 2
+    assert Q.table_info(str(tmp_path), "wide").row_groups(stop_at=4) >= 4
+    assert Q.table_info(str(tmp_path), "wide").row_groups(stop_at=2) >= 2
     assert opened == []
 
     # a caller needing the exact total upgrades the cache in place
-    assert Q.scan_splits(str(tmp_path), "wide") == 20
+    assert Q.table_info(str(tmp_path), "wide").row_groups() == 20
     opened.clear()
-    assert Q.scan_splits(str(tmp_path), "wide") == 20  # now fully cached
-    assert Q.scan_splits(str(tmp_path), "wide", stop_at=100) == 20
+    assert Q.table_info(str(tmp_path), "wide").row_groups() == 20  # now fully cached
+    assert Q.table_info(str(tmp_path), "wide").row_groups(stop_at=100) == 20
     assert opened == []
+
+
+def _jobs_in_group(spark, group: str, fn):
+    """Run ``fn()`` under job group ``group``; return its result and the
+    number of Spark jobs the group started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_second_tbl_of_every_table_starts_no_job(spark, sf_smoke):
+    """The catalog keeps each table's inferred schema: a second tbl() of
+    every fixture table starts no Spark job and returns the first schema."""
+    from bee_proof_spark.queries import TABLES, tbl
+
+    first = {n: tbl(spark, sf_smoke, n).schema for n in TABLES}
+    second, jobs = _jobs_in_group(
+        spark, "catalog-second-read", lambda: {n: tbl(spark, sf_smoke, n).schema for n in TABLES}
+    )
+    assert jobs == 0
+    assert second == first
+
+
+def test_catalog_sees_an_equal_size_rewrite(spark, tmp_path):
+    """A table file rewritten at the same byte size gets a new entry through
+    its new mtime_ns, so tbl() returns the new schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bee_proof_spark.queries import table_info, tbl
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"aa": [1, 2, 3]}), path)
+    st = os.stat(path)
+    assert tbl(spark, str(tmp_path), "t").columns == ["aa"]
+    pq.write_table(pa.table({"bb": [1, 2, 3]}), path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert os.path.getsize(path) == st.st_size
+    assert table_info(str(tmp_path), "t").key == (st.st_mtime_ns + 10**9, st.st_size)
+    assert tbl(spark, str(tmp_path), "t").columns == ["bb"]
+
+
+def test_catalog_schema_follows_the_inference_confs(spark, tmp_path):
+    """The kept schema is per tuple of parquet inference confs: flipping
+    spark.sql.parquet.binaryAsString gives the other column type."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import BinaryType, StringType
+
+    from bee_proof_spark.queries import tbl
+
+    pq.write_table(pa.table({"b": pa.array([b"x", b"y"], pa.binary())}), tmp_path / "t.parquet")
+    key = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        assert tbl(spark, str(tmp_path), "t").schema["b"].dataType == BinaryType()
+        spark.conf.set(key, "true")
+        df = tbl(spark, str(tmp_path), "t")
+        assert df.schema["b"].dataType == StringType()
+        assert sorted(r.b for r in df.collect()) == ["x", "y"]
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_events_nanos_read_through_the_kept_schema(spark, tmp_path):
+    """An events table with TIMESTAMP(NANOS) ts still reads as a
+    TimestampType ts, truncated to micros, equal to a bare read plus the
+    ns -> us conversion."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, TimestampType
+
+    from bee_proof_spark.queries import tbl
+
+    ns = [1_704_067_200_123_456_789, 1_704_070_800_987_654_321]
+    pq.write_table(
+        pa.table({"event_id": [0, 1], "ts": pa.array(ns, pa.timestamp("ns", tz="UTC"))}),
+        tmp_path / "events.parquet",
+    )
+    got = tbl(spark, str(tmp_path), "events")
+    got = tbl(spark, str(tmp_path), "events")  # the second read uses the kept schema
+    bare = spark.read.parquet(str(tmp_path / "events.parquet"))
+    assert isinstance(bare.schema["ts"].dataType, LongType)
+    bare = bare.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    assert got.schema["ts"].dataType == TimestampType()
+    assert got.schema == bare.schema
+    assert sorted(got.collect()) == sorted(bare.collect())
+
+
+def test_catalog_is_shared_by_threads(spark, tmp_path, monkeypatch):
+    """Eight threads reading one fresh table through tbl() and the catalog
+    get equal results, from one schema inference and one open of each
+    footer."""
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bee_proof_spark.queries import table_info, tbl
+
+    table_dir = tmp_path / "t.parquet"
+    table_dir.mkdir()
+    for i in range(3):
+        pq.write_table(pa.table({"id": list(range(10))}), table_dir / f"part-{i:05d}.parquet")
+    opened = _count_footer_opens(monkeypatch)
+    barrier = threading.Barrier(8)
+    results: dict[int, tuple] = {}
+
+    def read(i: int) -> None:
+        def facts():
+            barrier.wait()
+            info = table_info(str(tmp_path), "t")
+            schema = tbl(spark, str(tmp_path), "t").schema
+            return schema, info.rows, info.row_groups(), info.bytes
+
+        results[i] = _jobs_in_group(spark, f"catalog-thread-{i}", facts)
+
+    threads = [threading.Thread(target=read, args=(i,)) for i in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(results) == 8
+    facts = [r[0] for r in results.values()]
+    assert all(f == facts[0] for f in facts)
+    schema, rows, groups, size = facts[0]
+    assert schema.names == ["id"] and (rows, groups) == (30, 3) and size > 0
+    assert sum(r[1] for r in results.values()) == 1  # one inference job
+    assert sorted(opened) == sorted(str(p) for p in table_dir.iterdir())
 
 
 _CPUS_PROBE = """

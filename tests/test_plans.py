@@ -9,6 +9,8 @@ incident even when sf0.001 results stay right.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pytest
 
 from bee_proof_spark.queries import load_all
@@ -66,7 +68,7 @@ def test_semi_anti_joins_planned(spark, sf_smoke, monkeypatch):
     # not one row per returned lineitem (30% at the 100x fixture).
     from bee_proof_spark.queries import tpch
 
-    monkeypatch.setattr(tpch, "table_bytes", lambda sf, name: 1 << 40)
+    monkeypatch.setattr(tpch, "table_info", lambda sf, name: SimpleNamespace(bytes=1 << 40))
     q4_big = _plan(spark, "tpch_q4_priority", sf_smoke, mode="simple")
     assert q4_big.count("HashAggregate") == 4, "probe-side distinct dropped"
     q22 = _plan(spark, "tpch_q22_global_sales", sf_smoke)
@@ -477,7 +479,7 @@ def test_banded_rank_rewrites_match_plain_window(spark, sf_smoke, monkeypatch, q
 
     reg = load_all()
     plain = sorted(map(tuple, reg[qid].builder(spark, sf_smoke).collect()))
-    monkeypatch.setattr(windows, "table_bytes", lambda sf, name: 1 << 40)
+    monkeypatch.setattr(windows, "table_info", lambda sf, name: SimpleNamespace(bytes=1 << 40))
     banded_df = reg[qid].builder(spark, sf_smoke)
     banded = sorted(map(tuple, banded_df.collect()))
     assert plain == banded
@@ -495,7 +497,7 @@ def test_pack_sequences_banded_prefix_sum_matches_plain(spark, sf_smoke, monkeyp
 
     reg = load_all()
     plain = sorted(map(tuple, reg["ext_pack_sequences"].builder(spark, sf_smoke).collect()))
-    monkeypatch.setattr(extensions, "table_bytes", lambda sf, name: 1 << 40)
+    monkeypatch.setattr(extensions, "table_info", lambda sf, name: SimpleNamespace(bytes=1 << 40))
     banded_df = reg["ext_pack_sequences"].builder(spark, sf_smoke)
     banded = sorted(map(tuple, banded_df.collect()))
     assert plain == banded

@@ -199,7 +199,7 @@ def test_streaming_state_partitions_sizing(tmp_path, monkeypatch):
 def test_unknown_row_count_is_none_and_routes_to_parquet_sink(
     spark, sf_smoke, tmp_path, monkeypatch
 ):
-    """An unreadable footer makes events_row_count return None (never a
+    """An unreadable footer makes the events catalog rows None (never a
     partial or zero count), and run_to_memory_sink treats None (unknown
     input size) conservatively: the parquet sink, because guessing "small"
     on a 100M-row fixture re-triggers the driver.maxResultSize abort the
@@ -207,7 +207,7 @@ def test_unknown_row_count_is_none_and_routes_to_parquet_sink(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from bee_proof_spark.streaming import events_row_count
+    from bee_proof_spark.queries import table_info
     from bee_proof_spark.streaming import replay
 
     # one good part + one corrupt part -> None, not a partial 5
@@ -218,7 +218,7 @@ def test_unknown_row_count_is_none_and_routes_to_parquet_sink(
         str(bad / "events.parquet" / "part-00000.parquet"),
     )
     (bad / "events.parquet" / "part-00001.parquet").write_bytes(b"not parquet")
-    assert events_row_count(str(bad)) is None
+    assert table_info(str(bad), "events").rows is None
 
     # input_rows=None takes the parquet sink even though the stream is tiny
     sink_dirs: list[str] = []
