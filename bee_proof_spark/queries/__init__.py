@@ -201,15 +201,18 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the schema :meth:`TableInfo.schema` inferred once, so it starts no
     schema-inference job.
 
-    ``events.ts`` is written as parquet TIMESTAMP(NANOS), which Spark rejects
-    by default (PARQUET_TYPE_ILLEGAL) while DuckDB truncates to micros. We
-    read nanos as long (legacy conf) and convert ns -> us with integer
-    division (a double division would lose precision above 2^53 ns).
-    Engine-built sessions pin the legacy conf at build (session.py) so the
-    session-wide toggle is uniform from the first query; the set below
-    covers FOREIGN sessions (the driver builds its own) and is why the
-    LongType branch is conditional - a session that already read the
-    schema differently keeps working.
+    Every fixture here stores ``events.ts`` as microsecond, not-UTC-adjusted
+    parquet, which Spark 4.1 infers as ``TimestampNTZType``; such a read
+    passes the ``events`` branch below unchanged. The ns -> us ``LongType``
+    branch serves nanos-written tables only, such as the one
+    ``test_events_nanos_read_through_the_kept_schema`` writes: Spark
+    rejects parquet TIMESTAMP(NANOS) by default (PARQUET_TYPE_ILLEGAL)
+    while DuckDB truncates to micros, so the legacy conf reads nanos as
+    long and integer division converts them (a double division would lose
+    precision above 2^53 ns). Engine-built sessions pin the legacy conf at
+    build (session.py); the set below covers FOREIGN sessions (the driver
+    builds its own), and the branch is conditional because a session that
+    already read the schema differently keeps working.
     """
     info = table_info(sf_dir, name)
     if name == "events":

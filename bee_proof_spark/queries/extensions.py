@@ -17,11 +17,13 @@ Scale posture is the whole point here:
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bee_proof_spark.queries import register, spread_scan, table_info, tbl
+from bee_proof_spark.tmputil import corpus_tag, pid_dir
 
 # ------------------------------------------------------------------ helpers
 
@@ -126,7 +128,12 @@ def _shingle_postings(d: DataFrame) -> DataFrame:
 #: jaccard pair join are each computed ONCE per corpus, no matter how many
 #: downstream dedup operators consume them. Fixture dirs are immutable per
 #: process (TESTDATA.md), which is what makes per-path memoization sound.
+#: ``_FAMILY_LOCK`` is held across lookup, eviction, ``build()`` and the
+#: FIFO cap, so concurrent first callers build a stage once and share it.
+#: It is re-entrant because stage builds nest (shared_minhash_signatures
+#: builds on shared_shingle_postings).
 _FAMILY_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+_FAMILY_LOCK = threading.RLock()
 
 #: Corpus-size cutover from block-manager checkpoints to disk staging: a
 #: documents fixture above this many bytes of compressed parquet explodes
@@ -148,31 +155,6 @@ _DISK_STAGE_DOC_BYTES = 256 * 1024 * 1024
 #: table starts to crowd executor memory and durability wins.
 _DISK_STAGE_EMB_BYTES = 2 * 1024**3
 
-
-def _family_stage_dir(sf_dir: str, stage: str) -> str:
-    """Deterministic parquet-staging dir for a (corpus, stage), pid-scoped.
-
-    Same hygiene contract as the sink scratch dirs (scans._scratch): aged
-    dirs from dead pids are reclaimed, a live pid's dirs never are (its
-    read-back DataFrames lazily reference the files). Staged stages survive
-    session restarts within a process - sound because fixture dirs are
-    immutable per process (TESTDATA.md).
-    """
-    import hashlib
-    import tempfile
-
-    from bee_proof_spark.tmputil import pid_dir_alive, sweep_aged_dirs
-
-    base = os.path.join(tempfile.gettempdir(), "bee-proof-tmp", "familystage")
-    mine = f"pid{os.getpid()}"
-    sweep_aged_dirs(
-        base,
-        exempt=(os.path.join(base, mine),),
-        max_age_s=3600,
-        keep=lambda p, a: pid_dir_alive(p),
-    )
-    tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:10]
-    return os.path.join(base, mine, f"{tag}-{stage}")
 
 #: Bound on cached checkpoints per process: a long-lived session sweeping
 #: many corpora (oracle sweeps over tmp fixtures, multi-sf benches) must not
@@ -199,19 +181,24 @@ def _family_checkpoint(
     ``embeddings`` (a corpus with terabytes of vectors but few documents
     must still disk-stage its unit-vector table, and vice versa)."""
     app = spark.sparkContext.applicationId
-    for k in [k for k in _FAMILY_CACHE if k[0] != app]:
-        del _FAMILY_CACHE[k]
     key = (app, sf_dir, stage)
-    df = _FAMILY_CACHE.get(key)
-    if df is None:
+    with _FAMILY_LOCK:
+        for k in [k for k in _FAMILY_CACHE if k[0] != app]:
+            del _FAMILY_CACHE[k]
+        df = _FAMILY_CACHE.get(key)
+        if df is not None:
+            return df
         cutover = (
             _DISK_STAGE_EMB_BYTES if source == "embeddings" else _DISK_STAGE_DOC_BYTES
         )
         if table_info(sf_dir, source).bytes >= cutover:
-            # big corpus: stage to parquet (see _DISK_STAGE_DOC_BYTES). The
-            # _SUCCESS check makes the stage restart-safe within a pid; a
+            # big corpus: stage to parquet (see _DISK_STAGE_DOC_BYTES) in
+            # this pid's dir: its read-back DataFrames lazily reference the
+            # files. The _SUCCESS check makes the stage restart-safe within
+            # a pid (staged stages survive session restarts, sound because
+            # fixture dirs are immutable per process, TESTDATA.md); a
             # half-written dir from a killed run is overwritten whole.
-            path = _family_stage_dir(sf_dir, stage)
+            path = os.path.join(pid_dir("familystage"), f"{corpus_tag(sf_dir)}-{stage}")
             if not os.path.exists(os.path.join(path, "_SUCCESS")):
                 build().write.mode("overwrite").parquet(path)
             df = spark.read.parquet(path)
@@ -224,7 +211,7 @@ def _family_checkpoint(
         _FAMILY_CACHE[key] = df
         while len(_FAMILY_CACHE) > _FAMILY_CACHE_MAX:
             _FAMILY_CACHE.pop(next(iter(_FAMILY_CACHE)))
-    return df
+        return df
 
 
 def shared_shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bee_proof_spark.queries import dsum, o_dsum, register, tbl
+from bee_proof_spark.queries import dsum, o_dsum, register, table_info, tbl
+from bee_proof_spark.tmputil import corpus_tag, pid_dir
 
 
 @register(
@@ -245,57 +246,25 @@ def join_smb_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     that key skips both Exchanges (tests/test_plans.py asserts the absence).
     Bucket count would be sized to target-partition size on a real cluster.
     """
-    import os
-    import shutil
-    import tempfile
-
-    from bee_proof_spark.tmputil import pid_dir_alive, sweep_aged_dirs
-
-    # Explicit location under the engine tmp tree: table placement never
-    # depends on the caller session's warehouse/cwd. Keyed by (sf, pid):
-    # the catalog is per-process (in-memory) but the PATH is shared, so two
-    # concurrent processes writing the same location would race each other's
-    # rmtree/write; and a catalog keyed by bare table name would silently
-    # serve a previous sf_dir's buckets to a session that switched scales.
-    base = os.path.join(tempfile.gettempdir(), "bee-proof-tmp", "bucketed")
-    mine = f"pid{os.getpid()}"
-    sweep_aged_dirs(
-        base,
-        exempt=(os.path.join(base, mine),),
-        max_age_s=3600,
-        keep=lambda p, age: pid_dir_alive(p),
-    )
-    # The tag carries a fingerprint of the SOURCE files (abs path + per-file
-    # mtime/size), not just the directory basename: two corpora at
-    # same-named paths, or a fixture regenerated in place, must produce a
-    # fresh bucketed table instead of the catalog silently serving the old
-    # one (same discipline as the streaming replay snapshot key).
     import hashlib
+    import os
+    import re
+    import shutil
 
-    def _stat_part(p: str) -> str:
-        # st_mtime_ns, not second-resolution st_mtime: a same-second
-        # equal-size in-place rewrite must invalidate (replay.py discipline).
-        if os.path.isfile(p):
-            st = os.stat(p)
-            return f"{st.st_mtime_ns}-{st.st_size}"
-        tot, mt = 0, 0
-        for root, _, files in os.walk(p):
-            for f in files:
-                st = os.stat(os.path.join(root, f))
-                tot, mt = tot + st.st_size, max(mt, st.st_mtime_ns)
-        return f"{mt}-{tot}"
-
-    fp = "|".join(
-        [os.path.abspath(sf_dir)]
-        + [_stat_part(os.path.join(sf_dir, f"{n}.parquet")) for n in ("lineitem", "orders")]
-    )
-    sf_tag = (
-        os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-        + "_" + hashlib.md5(fp.encode()).hexdigest()[:8]
-    )
+    # Explicit location in this process's pid dir: table placement never
+    # depends on the caller session's warehouse/cwd, and two concurrent
+    # processes never race each other's rmtree/write. The catalog name
+    # carries the corpus tag and both source tables' catalog keys: two
+    # corpora at same-named paths, or a fixture regenerated in place, get
+    # fresh bucketed tables instead of the catalog silently serving the old
+    # ones (the replay snapshot key follows the same rule).
+    keys = [table_info(sf_dir, n).key for n in ("lineitem", "orders")]
+    fp = hashlib.md5(repr(keys).encode()).hexdigest()[:8]
+    sf_tag = re.sub(r"[^0-9A-Za-z_]", "_", f"{corpus_tag(sf_dir)}_{fp}")
+    base = pid_dir("bucketed")
     for name, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
         table = f"bps_bucketed_{name}_{sf_tag}"
-        loc = os.path.join(base, mine, sf_tag, name)
+        loc = os.path.join(base, sf_tag, name)
         if not spark.catalog.tableExists(table):
             # a previous session of this pid may have left the location behind
             shutil.rmtree(loc, ignore_errors=True)

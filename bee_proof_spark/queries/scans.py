@@ -17,38 +17,24 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bee_proof_spark.queries import _exact_sum, register, tbl
+from bee_proof_spark.tmputil import corpus_tag, pid_dir
 
 
 def _scratch(name: str, sf_dir: str = "") -> str:
     """Fresh deterministic scratch dir for a sink query.
 
-    Keyed by (query name, sf basename, pid): the returned read is often LAZY,
-    so a concurrent sweep at another scale factor (or another process) must
-    not rmtree/rewrite the directory a first caller has yet to collect from.
+    Keyed by (query name, corpus, pid): the returned read is often LAZY,
+    so a call on another fixture dir (or in another process) must not
+    rmtree/rewrite the directory a first caller has yet to collect from.
     """
-    from bee_proof_spark.tmputil import pid_dir_alive, sweep_aged_dirs
-
-    leaf = name if not sf_dir else f"{name}-{os.path.basename(sf_dir.rstrip('/'))}"
-    sinks = os.path.join(tempfile.gettempdir(), "bee-proof-tmp", "sinks")
-    mine = f"pid{os.getpid()}"
-    # Reclaim DEAD processes' pid dirs once they age out (crashed or exited
-    # runs never clean up after themselves; unbounded /tmp growth otherwise).
-    # A live pid's dir is never reclaimed regardless of age - its lazily-read
-    # sink DataFrames may still reference files there.
-    sweep_aged_dirs(
-        sinks,
-        exempt=(os.path.join(sinks, mine),),
-        max_age_s=3600,
-        keep=lambda p, age: pid_dir_alive(p),
-    )
-    path = os.path.join(sinks, mine, leaf)
+    leaf = f"{name}-{corpus_tag(sf_dir)}" if sf_dir else name
+    path = os.path.join(pid_dir("sinks"), leaf)
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
     return path

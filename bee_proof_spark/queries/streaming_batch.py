@@ -522,7 +522,7 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bee_proof_spark.streaming import replay_events_stream
     from bee_proof_spark.streaming.replay import _start
 
-    # _scratch owns the (name, sf basename, pid) keying and fresh-dir reset;
+    # _scratch owns the (name, corpus, pid) keying and fresh-dir reset;
     # resetting BOTH dirs keeps checkpoint and target in lockstep (a stale
     # checkpoint against a fresh target would skip already-committed batches).
     target = _scratch("upsert", sf_dir)

@@ -1,7 +1,7 @@
 """SparkSession profiles for the bee-proof-spark engine.
 
 Mirrors the reference harness's pinned execution profile (ManifestRunner.java:169-229,
-see SURVEY.md section 4.1): ephemeral local warehouse under ``./bee-proof-tmp``,
+see SURVEY.md section 4.1): ephemeral local warehouse under the engine tmp tree,
 in-memory catalog (the Derby-in-memory metastore equivalent), fail-fast semantics,
 and deterministic conf. Two profiles:
 
@@ -32,9 +32,7 @@ from pyspark.errors import PySparkRuntimeError
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
-from bee_proof_spark.tmputil import tree_bytes
-
-TMP_ROOT = "bee-proof-tmp"
+from bee_proof_spark.tmputil import TMP_ROOT, tree_bytes
 
 
 def auto_shuffle_partitions(data_dir: str | None = None) -> int:
@@ -80,12 +78,14 @@ _COMMON_CONF: dict[str, str] = {
     # In-memory catalog = the reference's throwaway Derby metastore
     # (ManifestRunner.java:195).
     "spark.sql.catalogImplementation": "in-memory",
-    # The events fixture stores ts as parquet TIMESTAMP(NANOS), which Spark
-    # rejects by default; the engine reads nanos as long and converts
-    # (queries.tbl). Pinned at session build so behavior is uniform from
-    # the first query - previously tbl() flipped it mid-session on the
-    # first events read, so nanos handling depended on query order. tbl()
-    # still sets it for foreign sessions (the driver builds its own).
+    # Every fixture here stores events.ts as microsecond, not-UTC-adjusted
+    # parquet, which Spark 4.1 infers as TimestampNTZType: this conf does
+    # not touch it. It serves nanos-written tables only (such as the one
+    # test_events_nanos_read_through_the_kept_schema writes), which Spark
+    # rejects by default: read as long, queries.tbl converts ns -> us.
+    # Pinned at session build so that handling is uniform from the first
+    # query; tbl() still sets it for foreign sessions (the driver builds
+    # its own).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Arrow for any pandas interchange (UDF paths).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -423,8 +423,9 @@ def reset_tmp_tree(base_dir: str | None = None) -> str:
 
     Mirrors the per-run directory reset at ManifestRunner.java:172-175.
     The rest of the tmp root is left alone: it holds other processes' live
-    pid-owned dirs and shared snapshots (sinks, familystage, stream-src,
-    bucketed), each reclaimed by its owner's own age and liveness sweep.
+    ``tmputil.pid_dir`` dirs (sinks, stream-sink, familystage, bucketed),
+    which ``pid_dir``'s own age and liveness sweep reclaims, and the shared
+    ``stream-src`` snapshots, which the replay's sweep reclaims.
     """
     base = base_dir or os.path.join(tempfile.gettempdir(), TMP_ROOT)
     for sub in ("warehouse", "scratch", "logs"):

@@ -26,6 +26,7 @@ from pyspark.sql.types import (
 )
 
 from bee_proof_spark.queries import table_info, tbl
+from bee_proof_spark.tmputil import TMP_ROOT, corpus_tag, pid_dir, sweep_aged_dirs
 
 #: Files ingested per micro-batch when replaying the 4-file snapshot.
 #: 2 keeps the replay MULTI-batch - the watermark still advances mid-stream
@@ -61,31 +62,25 @@ EVENTS_SCHEMA = StructType(
 def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events fixture.
 
-    The fixture stores ts as parquet TIMESTAMP(NANOS); the streaming reader
-    needs a fixed schema, so we re-materialize the (ns -> us converted) batch
-    table as a one-off parquet snapshot and stream from that.
+    The streaming reader needs a fixed schema, so the batch table read
+    through :func:`tbl` is re-materialized as a one-off parquet snapshot
+    and streamed from that. Every fixture here stores ``ts`` as
+    microsecond, not-UTC-adjusted parquet, which Spark 4.1 infers as
+    ``TimestampNTZType``; ``tbl``'s ns -> us ``LongType`` branch serves
+    nanos-written tables only, such as the one
+    ``test_events_nanos_read_through_the_kept_schema`` writes.
     """
-    import hashlib
-
-    # Snapshot key includes a layout version and the events table's catalog
-    # key, (mtime_ns, size): changed fixture data, a different directory
-    # with the same basename, or a new replay layout each produce a fresh
-    # snapshot path instead of silently replaying a stale one. ns-resolution
-    # mtime: an in-test fixture rebuilt twice within the same wall-clock
-    # second at an equal byte size must not collapse to the same snapshot
-    # (1-second truncation did exactly that).
+    # Snapshot key: corpus_tag (abspath hash: same-named sibling fixture
+    # dirs must not share a snapshot), a layout version and the events
+    # table's catalog key, (mtime_ns, size): changed fixture data or a new
+    # replay layout each produce a fresh snapshot path instead of silently
+    # replaying a stale one. ns-resolution mtime: an in-test fixture
+    # rebuilt twice within the same wall-clock second at an equal byte
+    # size must not collapse to the same snapshot.
     key = table_info(sf_dir, "events").key
     fp = "v2-%d-%d" % key if key else "v2-unknown"
-
-    # abspath hash, not basename: basename('') on a trailing-slash sf_dir
-    # (and same-named sibling fixture dirs) collapsed the namespace onto
-    # the fingerprint alone
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     snap = os.path.join(
-        tempfile.gettempdir(),
-        "bee-proof-tmp",
-        "stream-src",
-        f"{os.path.basename(sf_dir.rstrip('/')) or 'fixture'}-{tag}-{fp}",
+        tempfile.gettempdir(), TMP_ROOT, "stream-src", f"{corpus_tag(sf_dir)}-{fp}"
     )
     marker = os.path.join(snap, "_SUCCESS")
     # Refresh the current snapshot's mtime BEFORE sweeping: the sweep below
@@ -106,8 +101,6 @@ def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window because another process may still be replaying one (a replay
     # touches its snapshot's mtime first, so only a reader that has been
     # streaming for >24h straight could ever lose its files).
-    from bee_proof_spark.tmputil import sweep_aged_dirs
-
     sweep_aged_dirs(
         os.path.dirname(snap),
         exempt=(snap,),
@@ -274,21 +267,8 @@ _PARQUET_SINK_ROWS = 20_000_000
 
 
 def _parquet_sink_dir() -> str:
-    """Per-run scratch dir for a parquet stream sink, pid-scoped with the
-    same aged-sweep hygiene as the replay snapshots."""
-    import tempfile
-
-    from bee_proof_spark.tmputil import pid_dir_alive, sweep_aged_dirs
-
-    base = os.path.join(tempfile.gettempdir(), "bee-proof-tmp", "stream-sink")
-    mine = os.path.join(base, f"pid{os.getpid()}")
-    sweep_aged_dirs(
-        base,
-        exempt=(mine,),
-        max_age_s=3600,
-        keep=lambda p, a: pid_dir_alive(p),
-    )
-    return os.path.join(mine, uuid.uuid4().hex[:12])
+    """Fresh per-run dir for a parquet stream sink, under this process's pid dir."""
+    return os.path.join(pid_dir("stream-sink"), uuid.uuid4().hex[:12])
 
 
 #: Checkpoint manager for every stream this package starts. Spark's default

@@ -597,3 +597,81 @@ def test_reset_tmp_tree_keeps_other_processes_dirs(tmp_path):
     assert (snapshot / "_SUCCESS").exists()
     assert os.listdir(base / "warehouse") == []
     assert (base / "scratch").is_dir() and (base / "logs").is_dir()
+
+
+def test_sink_scratch_of_same_named_fixture_dirs_is_not_shared(spark, tmp_path):
+    """Two fixture dirs with one basename get separate sink scratch dirs:
+    building roundtrip_csv on the second must not rewrite the files the
+    first one's lazy read still lists."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bee_proof_spark.queries.scans import roundtrip_csv
+
+    dirs = []
+    for sub, keys in (("a", [1, 2, 3]), ("b", [10, 20])):
+        d = tmp_path / sub / "sfx"
+        d.mkdir(parents=True)
+        pq.write_table(
+            pa.table({
+                "o_orderkey": pa.array(keys, pa.int64()),
+                "o_orderstatus": ["O"] * len(keys),
+                "o_totalprice": [1.0] * len(keys),
+                "o_orderdate": pa.array([0] * len(keys), pa.timestamp("us")),
+            }),
+            d / "orders.parquet",
+        )
+        dirs.append(str(d))
+    first = roundtrip_csv(spark, dirs[0])
+    second = roundtrip_csv(spark, dirs[1])
+    assert sorted(r.o_orderkey for r in first.collect()) == [1, 2, 3]
+    assert sorted(r.o_orderkey for r in second.collect()) == [10, 20]
+
+
+def test_family_checkpoint_builds_once_across_threads(spark, sf_smoke):
+    """Eight threads asking for one new family stage at once run its build
+    once and all get the same DataFrame."""
+    import threading
+    import time
+    import uuid
+
+    from bee_proof_spark.queries import extensions as ext
+
+    stage = f"thread_probe_{uuid.uuid4().hex[:8]}"
+    calls = []
+    barrier = threading.Barrier(8)
+    results: dict[int, object] = {}
+
+    def build():
+        calls.append(1)
+        time.sleep(0.2)
+        return spark.range(2)
+
+    def get(i: int) -> None:
+        barrier.wait()
+        results[i] = ext._family_checkpoint(spark, sf_smoke, stage, build)
+
+    threads = [threading.Thread(target=get, args=(i,)) for i in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(calls) == 1
+    assert len(results) == 8
+    assert all(df is results[0] for df in results.values())
+
+
+def test_tmp_tree_has_one_owner():
+    """Only tmputil names the engine's tmp root or judges pid-dir liveness;
+    every other module places its files through tmputil.pid_dir."""
+    import pathlib
+
+    import bee_proof_spark
+
+    pkg = pathlib.Path(bee_proof_spark.__file__).parent
+    offenders = []
+    for p in sorted(pkg.rglob("*.py")):
+        src = p.read_text()
+        if p != pkg / "tmputil.py" and ("bee-proof-tmp" in src or "pid_dir_alive" in src):
+            offenders.append(str(p.relative_to(pkg)))
+    assert offenders == []
