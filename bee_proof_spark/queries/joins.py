@@ -257,7 +257,7 @@ def join_smb_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # carries the corpus tag and both source tables' catalog keys: two
     # corpora at same-named paths, or a fixture regenerated in place, get
     # fresh bucketed tables instead of the catalog silently serving the old
-    # ones (the replay snapshot key follows the same rule).
+    # ones. The replay snapshot, also in a pid dir, is keyed the same way.
     keys = [table_info(sf_dir, n).key for n in ("lineitem", "orders")]
     fp = hashlib.md5(repr(keys).encode()).hexdigest()[:8]
     sf_tag = re.sub(r"[^0-9A-Za-z_]", "_", f"{corpus_tag(sf_dir)}_{fp}")

@@ -2,7 +2,7 @@
 roundtrips, CTAS, INSERT OVERWRITE/INTO, dynamic partitioned writes, external
 tables, views.
 
-Each sink query WRITES to a scratch dir (recreated per call) and reads back;
+Each sink query WRITES to a scratch dir (new per call) and reads back;
 the oracle describes the end state via the source views. RCFile/SequenceFile
 are documented out of scope (no native Spark writer - SURVEY section 2-B
 seq_rcfile_note); Hive ACID UPDATE/DELETE/MERGE likewise (INSERT OVERWRITE is
@@ -16,27 +16,24 @@ dynamic-partition INSERT equivalent.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bee_proof_spark.queries import _exact_sum, register, tbl
-from bee_proof_spark.tmputil import corpus_tag, pid_dir
+from bee_proof_spark.tmputil import fresh_dir
 
 
-def _scratch(name: str, sf_dir: str = "") -> str:
-    """Fresh deterministic scratch dir for a sink query.
+def _scratch(name: str) -> str:
+    """A new, empty scratch dir for one call of a sink query.
 
-    Keyed by (query name, corpus, pid): the returned read is often LAZY,
-    so a call on another fixture dir (or in another process) must not
-    rmtree/rewrite the directory a first caller has yet to collect from.
+    The returned read is often LAZY, so no later call (another fixture,
+    thread or build of the same query) may rewrite a dir a caller has yet
+    to collect from: every call gets its own leaf under ``pid_dir("sinks")``.
     """
-    leaf = f"{name}-{corpus_tag(sf_dir)}" if sf_dir else name
-    path = os.path.join(pid_dir("sinks"), leaf)
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
+    path = fresh_dir("sinks", name)
+    os.makedirs(path)
     return path
 
 
@@ -79,7 +76,7 @@ FROM orders
 def roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TEXTFILE/OpenCSVSerde equivalent: write csv, read back with explicit
     schema (schema-on-read, as Hive DDL declares it)."""
-    path = _scratch("csv", sf_dir)
+    path = _scratch("csv")
     src = tbl(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
@@ -106,7 +103,7 @@ SELECT c_custkey, c_name, c_nationkey, c_acctbal FROM customer
 @register("roundtrip_json", oracle=_JSON_ORACLE)
 def roundtrip_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JsonSerDe equivalent: write json lines, read back with schema."""
-    path = _scratch("json", sf_dir)
+    path = _scratch("json")
     src = tbl(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal"
     )
@@ -131,7 +128,7 @@ FROM lineitem WHERE l_returnflag = 'R'
 @register("roundtrip_orc", oracle=_ORC_ORACLE)
 def roundtrip_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STORED AS ORC roundtrip (Hive 0.11+)."""
-    path = _scratch("orc", sf_dir)
+    path = _scratch("orc")
     src = (
         tbl(spark, sf_dir, "lineitem")
         .filter(F.col("l_returnflag") == "R")
@@ -159,7 +156,7 @@ def roundtrip_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     this format is an INGEST/EXPORT boundary, not a query-layer format -
     query paths convert to parquet first (scan_parquet/ctas_table).
     """
-    path = _scratch("xml", sf_dir)
+    path = _scratch("xml")
     src = tbl(spark, sf_dir, "part").select(
         "p_partkey", "p_name", "p_brand", "p_retailprice"
     )
@@ -185,7 +182,7 @@ SELECT l_returnflag, count(*) AS cnt FROM lineitem GROUP BY l_returnflag
 @register("ctas_table", oracle=_CTAS_ORACLE)
 def ctas_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CREATE TABLE AS SELECT into the session catalog + read back."""
-    path = _scratch("ctas", sf_dir)
+    path = _scratch("ctas")
     tbl(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_src")
     spark.sql("DROP TABLE IF EXISTS bps_ctas")
     spark.sql(
@@ -205,7 +202,7 @@ SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderstatus = 'F'
 @register("insert_overwrite", oracle=_OVERWRITE_ORACLE)
 def insert_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INSERT OVERWRITE TABLE: second write replaces the first entirely."""
-    path = _scratch("overwrite", sf_dir)
+    path = _scratch("overwrite")
     tbl(spark, sf_dir, "orders").createOrReplaceTempView("orders_src")
     spark.sql("DROP TABLE IF EXISTS bps_ovr")
     spark.sql(
@@ -233,7 +230,7 @@ SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderstatus = 'P'
 @register("insert_into_append", oracle=_APPEND_ORACLE)
 def insert_into_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INSERT INTO TABLE appends (oracle: UNION ALL of both inserts)."""
-    path = _scratch("append", sf_dir)
+    path = _scratch("append")
     tbl(spark, sf_dir, "orders").createOrReplaceTempView("orders_src")
     spark.sql("DROP TABLE IF EXISTS bps_app")
     spark.sql(
@@ -261,7 +258,7 @@ FROM lineitem
 def write_partitioned_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic-partition INSERT: partitionBy writes one dir per key value
     (hive-style layout); read back re-attaches partition columns."""
-    path = _scratch("dynpart", sf_dir)
+    path = _scratch("dynpart")
     src = tbl(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag", "l_linestatus"
     )
@@ -277,7 +274,7 @@ SELECT s_suppkey, s_name, s_acctbal FROM supplier
 @register("external_table_scan", oracle=_EXTERNAL_ORACLE)
 def external_table_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CREATE EXTERNAL TABLE ... LOCATION over pre-existing files."""
-    path = _scratch("external", sf_dir)
+    path = _scratch("external")
     tbl(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal").write.mode(
         "overwrite"
     ).parquet(f"{path}/files")
@@ -322,7 +319,7 @@ def scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ``maxPartitionBytes`` respected; payloads go executor-side only
     (``content`` column pruned unless projected).
     """
-    path = _scratch("binfiles", sf_dir)
+    path = _scratch("binfiles")
     docs = (
         tbl(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 20)
@@ -345,7 +342,7 @@ def scan_textfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw text-line source (``spark.read.text``): the classic line-per-row
     corpus ingestion path. Documents are written as text lines (fixture text
     is newline-free) and read back; content must round-trip exactly."""
-    path = _scratch("textlines", sf_dir)
+    path = _scratch("textlines")
     tbl(spark, sf_dir, "documents").select("text").write.mode("overwrite").text(path)
     return spark.read.text(path)
 
@@ -367,7 +364,7 @@ def msck_repair_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: repair lists directories, not data files' contents; the
     subsequent per-partition count prunes on the discovered partitions.
     """
-    path = _scratch("msck", sf_dir)
+    path = _scratch("msck")
     (
         tbl(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 200)
@@ -399,7 +396,7 @@ def analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface the recorded row count from DESCRIBE EXTENDED (what the
     cost-based optimizer reads for join reordering / broadcast decisions).
     """
-    path = _scratch("stats", sf_dir)
+    path = _scratch("stats")
     tbl(spark, sf_dir, "orders").write.mode("overwrite").parquet(f"{path}/t")
     spark.sql("DROP TABLE IF EXISTS bps_stats")
     spark.sql(
@@ -429,7 +426,7 @@ def ddl_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CREATE/ALTER/DESCRIBE/SHOW/DROP lifecycle smoke (dry-run surface).
     The DESCRIBE projection after ADD COLUMNS is deterministic, so the DDL
     side effects are oracle-checked through the resulting schema."""
-    path = _scratch("ddl", sf_dir)
+    path = _scratch("ddl")
     spark.sql("DROP TABLE IF EXISTS bps_ddl")
     spark.sql(
         f"CREATE TABLE bps_ddl (a INT, b STRING) USING parquet LOCATION '{path}/t' "
@@ -497,7 +494,7 @@ def dml_merge_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("c_acctbal"),
         )
     )
-    path = _scratch("merge_target", sf_dir)
+    path = _scratch("merge_target")
     merged.write.mode("overwrite").parquet(f"{path}/t")
     return spark.read.parquet(f"{path}/t")
 

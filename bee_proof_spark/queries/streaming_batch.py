@@ -522,11 +522,11 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bee_proof_spark.streaming import replay_events_stream
     from bee_proof_spark.streaming.replay import _start
 
-    # _scratch owns the (name, corpus, pid) keying and fresh-dir reset;
-    # resetting BOTH dirs keeps checkpoint and target in lockstep (a stale
-    # checkpoint against a fresh target would skip already-committed batches).
-    target = _scratch("upsert", sf_dir)
-    chk = _scratch("upsert-chk", sf_dir)
+    # Both dirs are new per call, so checkpoint and target stay in lockstep
+    # (a stale checkpoint against a fresh target would skip already-committed
+    # batches).
+    target = _scratch("upsert")
+    chk = _scratch("upsert-chk")
     w = Window.partitionBy("user_id").orderBy(
         F.desc("ts"), F.desc("event_id")
     )

@@ -59,6 +59,10 @@ _CTAS_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 
+#: Spark's own ${...} substitution, which a ScriptRunner turns off on its
+#: session and run_manifest turns back to what it found.
+_SUBSTITUTE = "spark.sql.variable.substitute"
+
 #: Exception marker EXPLAIN EXTENDED embeds for analysis failures (observed
 #: Spark 4 behavior: the Analyzed section carries the exception text).
 _EXPLAIN_ERR_RE = re.compile(r"^(org\.apache\.spark\.[\w.]*Exception[^\n]*)", re.MULTILINE)
@@ -117,7 +121,7 @@ class ScriptRunner:
         # references stay verbatim). Spark's built-in substitutor would
         # otherwise re-substitute inside spark.sql() with different rules.
         try:
-            spark.conf.set("spark.sql.variable.substitute", "false")
+            spark.conf.set(_SUBSTITUTE, "false")
         except Exception:
             pass
 
@@ -260,6 +264,7 @@ def run_manifest(
     """Execute a parsed Manifest: sequential tasks, fail-fast, timing line."""
     out = out or print
     start = time.monotonic()
+    prev_substitute = spark.conf.get(_SUBSTITUTE, None)  # ScriptRunner turns it off
     runner = ScriptRunner(
         spark,
         execute=manifest.enable_hadoop,
@@ -279,5 +284,9 @@ def run_manifest(
             out("")
             out("")
     finally:
+        if prev_substitute is None:
+            spark.conf.unset(_SUBSTITUTE)
+        else:
+            spark.conf.set(_SUBSTITUTE, prev_substitute)
         elapsed_ms = int((time.monotonic() - start) * 1000)
         out(f"> Total time:  {elapsed_ms}ms")

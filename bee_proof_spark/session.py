@@ -422,10 +422,11 @@ def reset_tmp_tree(base_dir: str | None = None) -> str:
     """Empty and recreate the run's warehouse, scratch and logs dirs.
 
     Mirrors the per-run directory reset at ManifestRunner.java:172-175.
-    The rest of the tmp root is left alone: it holds other processes' live
-    ``tmputil.pid_dir`` dirs (sinks, stream-sink, familystage, bucketed),
-    which ``pid_dir``'s own age and liveness sweep reclaims, and the shared
-    ``stream-src`` snapshots, which the replay's sweep reclaims.
+    The rest of the tmp root is left alone: it holds only per-process
+    ``tmputil.pid_dir`` dirs (sinks, stream-sink, stream-src, familystage,
+    bucketed), other live processes' among them, which ``pid_dir``'s own
+    age and liveness sweep reclaims. No dir there is shared between
+    processes.
     """
     base = base_dir or os.path.join(tempfile.gettempdir(), TMP_ROOT)
     for sub in ("warehouse", "scratch", "logs"):

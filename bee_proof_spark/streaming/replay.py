@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,7 +26,7 @@ from pyspark.sql.types import (
 )
 
 from bee_proof_spark.queries import table_info, tbl
-from bee_proof_spark.tmputil import TMP_ROOT, corpus_tag, pid_dir, sweep_aged_dirs
+from bee_proof_spark.tmputil import corpus_tag, fresh_dir, pid_dir
 
 #: Files ingested per micro-batch when replaying the 4-file snapshot.
 #: 2 keeps the replay MULTI-batch - the watermark still advances mid-stream
@@ -63,8 +63,9 @@ def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events fixture.
 
     The streaming reader needs a fixed schema, so the batch table read
-    through :func:`tbl` is re-materialized as a one-off parquet snapshot
-    and streamed from that. Every fixture here stores ``ts`` as
+    through :func:`tbl` is re-materialized as a parquet snapshot in this
+    process's ``stream-src`` dir and streamed from that; later calls on the
+    same fixture reuse it. Every fixture here stores ``ts`` as
     microsecond, not-UTC-adjusted parquet, which Spark 4.1 infers as
     ``TimestampNTZType``; ``tbl``'s ns -> us ``LongType`` branch serves
     nanos-written tables only, such as the one
@@ -74,48 +75,15 @@ def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dirs must not share a snapshot), a layout version and the events
     # table's catalog key, (mtime_ns, size): changed fixture data or a new
     # replay layout each produce a fresh snapshot path instead of silently
-    # replaying a stale one. ns-resolution mtime: an in-test fixture
-    # rebuilt twice within the same wall-clock second at an equal byte
-    # size must not collapse to the same snapshot.
+    # replaying a stale one.
     key = table_info(sf_dir, "events").key
     fp = "v2-%d-%d" % key if key else "v2-unknown"
-    snap = os.path.join(
-        tempfile.gettempdir(), TMP_ROOT, "stream-src", f"{corpus_tag(sf_dir)}-{fp}"
-    )
-    marker = os.path.join(snap, "_SUCCESS")
-    # Refresh the current snapshot's mtime BEFORE sweeping: the sweep below
-    # (and any concurrent process's sweep) reads mtime age as "unused for
-    # that long", so touching first keeps this replay's snapshot out of
-    # every sweeper's kill window. Part-file mtimes (the deterministic
-    # replay-order contract) live inside the dir and are untouched.
-    if os.path.exists(marker):
-        try:
-            os.utime(snap, None)
-        except OSError:
-            pass
-    # Sweep everything old in the stream-src parent, not just entries
-    # sharing the current fingerprint prefix: snapshots keyed by older
-    # fingerprints (changed fixture mtime/size) and build/stale dirs from
-    # crashed builders would otherwise accumulate forever. Incomplete dirs
-    # (no _SUCCESS) are orphans after 1h; COMPLETE snapshots get a 24h grace
-    # window because another process may still be replaying one (a replay
-    # touches its snapshot's mtime first, so only a reader that has been
-    # streaming for >24h straight could ever lose its files).
-    sweep_aged_dirs(
-        os.path.dirname(snap),
-        exempt=(snap,),
-        max_age_s=3600,
-        keep=lambda p, age: age < 86400
-        and os.path.exists(os.path.join(p, "_SUCCESS")),
-    )
-    if not os.path.exists(marker):
-        # The snapshot path is SHARED across processes (a concurrent pytest +
-        # sweep both replay it): build in a pid-unique dir, then atomically
-        # rename into place - a reader can never observe a half-written
-        # snapshot, and whichever process loses the rename just uses the
-        # winner's complete snapshot.
-        build = f"{snap}.build-{os.getpid()}"
-        shutil.rmtree(build, ignore_errors=True)
+    snap = os.path.join(pid_dir("stream-src"), f"{corpus_tag(sf_dir)}-{fp}")
+    if not os.path.exists(snap):
+        # Threads of this process may build at once: each writes and stamps
+        # its own build dir, and one rename commits it, so the snapshot
+        # path only ever holds a complete, stamped snapshot.
+        build = f"{snap}.build-{uuid.uuid4().hex[:12]}"
         # Range-partition by ts into 4 roughly time-ordered files: with
         # _REPLAY_FILES_PER_TRIGGER (2) the replay yields multiple
         # micro-batches whose event times advance, so watermarks progress
@@ -126,49 +94,21 @@ def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             tbl(spark, sf_dir, "events")
             .repartitionByRange(4, "ts")
             .sortWithinPartitions("ts")
-            .write.mode("overwrite")
-            .parquet(build)
+            .write.parquet(build)
         )
         # FileStreamSource orders batches by modification time; one write job
         # stamps all files identically, leaving the REPLAY ORDER to
         # filesystem listing luck. Stamp part files in lexicographic order
         # (range partition i -> part-0000i) with ascending mtimes so the
         # stream replays in event-time order deterministically.
-        import time as _time
-
-        base = _time.time() - 3600
-        parts = sorted(
-            f for f in os.listdir(build) if f.startswith("part-")
-        )
+        base = time.time() - 3600
+        parts = sorted(f for f in os.listdir(build) if f.startswith("part-"))
         for i, fname in enumerate(parts):
             os.utime(os.path.join(build, fname), (base + i * 10, base + i * 10))
         try:
             os.rename(build, snap)
-        except OSError:
-            # Another process renamed its snapshot in first, or a stale
-            # markerless dir lingers from a crash. Never rmtree the shared
-            # path (a concurrent winner may have JUST completed it and its
-            # reader may be listing it): atomically move the stale dir
-            # ASIDE, then retry - a complete snapshot is only ever replaced
-            # by another complete snapshot, with a two-rename-wide gap.
-            if not os.path.exists(marker):
-                aside = f"{snap}.stale-{os.getpid()}"
-                try:
-                    os.rename(snap, aside)
-                except OSError:
-                    pass  # concurrent process moved or replaced it first
-                shutil.rmtree(aside, ignore_errors=True)
-                try:
-                    os.rename(build, snap)
-                except OSError:
-                    pass  # concurrent winner installed between aside and rename
+        except OSError:  # another thread committed first: stream its snapshot
             shutil.rmtree(build, ignore_errors=True)
-            if not os.path.exists(marker):
-                # Refuse to stream a half-written snapshot (silent wrong
-                # micro-batches); the caller can clear the path and retry.
-                raise RuntimeError(
-                    f"stream snapshot at {snap} is incomplete and could not be replaced"
-                )
     return (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", _REPLAY_FILES_PER_TRIGGER)
@@ -268,7 +208,7 @@ _PARQUET_SINK_ROWS = 20_000_000
 
 def _parquet_sink_dir() -> str:
     """Fresh per-run dir for a parquet stream sink, under this process's pid dir."""
-    return os.path.join(pid_dir("stream-sink"), uuid.uuid4().hex[:12])
+    return fresh_dir("stream-sink")
 
 
 #: Checkpoint manager for every stream this package starts. Spark's default

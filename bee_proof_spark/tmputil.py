@@ -7,17 +7,13 @@ builds and resets. Two kinds of entry live there:
 - per-run dirs (``warehouse``, ``scratch``, ``logs``) that
   ``session.reset_tmp_tree`` empties;
 - per-process dirs, ``<kind>/pid<N>`` from :func:`pid_dir` (sink scratch,
-  parquet stream sinks, family stages, bucketed tables), and the shared
-  ``stream-src`` replay snapshots, each reclaimed by an aged sweep.
+  parquet stream sinks, stream replay snapshots, family stages, bucketed
+  tables).
 
-The rules that keep a LIVE run's data safe are encoded here once
-(:func:`sweep_aged_dirs`):
-
-- an entry is only removed once it ages past ``max_age_s``;
-- the caller's own current path(s) are exempt outright;
-- a ``keep(path, age_s)`` predicate lets the caller protect entries the age
-  gate alone can't judge (a live pid's dir, a complete snapshot that gets a
-  longer grace period).
+No dir is shared between processes: a process writes only under its own
+pid dirs, and reads nothing another process wrote there. The one rule that
+crosses processes is reclamation, encoded once in :func:`pid_dir`: a dead
+process's dir goes once it is an hour old, a live process's dir never does.
 """
 
 from __future__ import annotations
@@ -27,7 +23,7 @@ import os
 import shutil
 import tempfile
 import time
-from collections.abc import Callable, Iterable
+import uuid
 
 TMP_ROOT = "bee-proof-tmp"
 
@@ -48,40 +44,6 @@ def tree_bytes(path: str) -> int:
             except OSError:
                 pass
     return total
-
-
-def sweep_aged_dirs(
-    parent: str,
-    *,
-    exempt: Iterable[str] = (),
-    max_age_s: float = 3600,
-    keep: Callable[[str, float], bool] | None = None,
-) -> None:
-    """Remove entries of ``parent`` older than ``max_age_s`` (best-effort).
-
-    ``exempt`` paths are never removed; ``keep(path, age_s)`` returning True
-    protects an entry. All OS errors are swallowed - reclamation must never
-    fail the query that triggered it.
-    """
-    try:
-        entries = os.listdir(parent)
-    except OSError:
-        return
-    exempt_set = set(exempt)
-    now = time.time()
-    for name in entries:
-        p = os.path.join(parent, name)
-        if p in exempt_set:
-            continue
-        try:
-            age = now - os.stat(p).st_mtime
-        except OSError:
-            continue
-        if age <= max_age_s:
-            continue
-        if keep is not None and keep(p, age):
-            continue
-        shutil.rmtree(p, ignore_errors=True)
 
 
 def pid_dir_alive(path: str) -> bool:
@@ -107,15 +69,35 @@ def pid_dir(kind: str) -> str:
     """This process's own dir for ``kind``, ``<tempdir>/<TMP_ROOT>/<kind>/pid<N>``
     (not created).
 
-    Sweeps ``kind`` first: a DEAD process's dir is reclaimed once it ages
-    past an hour (crashed or exited runs never clean up after themselves).
-    A live pid's dir never is, whatever its age: its lazily-read
-    DataFrames may still reference files there.
+    Sweeps ``kind`` first (best-effort; an OS error never fails the caller):
+    a DEAD process's dir is reclaimed once it ages past an hour (crashed or
+    exited runs never clean up after themselves). A live pid's dir never
+    is, whatever its age: its lazily-read DataFrames may still reference
+    files there.
     """
     base = os.path.join(tempfile.gettempdir(), TMP_ROOT, kind)
     mine = os.path.join(base, f"pid{os.getpid()}")
-    sweep_aged_dirs(base, exempt=(mine,), max_age_s=3600, keep=lambda p, age: pid_dir_alive(p))
+    try:
+        entries = os.listdir(base)
+    except OSError:
+        entries = []
+    now = time.time()
+    for name in entries:
+        p = os.path.join(base, name)
+        try:
+            aged = now - os.stat(p).st_mtime > 3600
+        except OSError:
+            continue
+        if aged and p != mine and not pid_dir_alive(p):
+            shutil.rmtree(p, ignore_errors=True)
     return mine
+
+
+def fresh_dir(kind: str, name: str = "") -> str:
+    """A new path ``<name>-<uuid>`` (or ``<uuid>``) in this process's ``kind``
+    dir, not created: one call's output, which no later call rewrites."""
+    leaf = uuid.uuid4().hex[:12]
+    return os.path.join(pid_dir(kind), f"{name}-{leaf}" if name else leaf)
 
 
 def corpus_tag(sf_dir: str) -> str:

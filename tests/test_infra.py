@@ -95,50 +95,32 @@ def test_bench_calibration_workload_is_fixed(spark):
         assert token in src, token
 
 
-def test_sweep_aged_dirs_protections(tmp_path):
-    """The /tmp reclamation rules: age gate, exempt paths, keep predicate
-    (live pids; complete snapshots within their grace window)."""
+def test_sweep_aged_dirs_protections(tmp_path, monkeypatch):
+    """pid_dir's reclamation rules: a dead pid's dir goes once it is over an
+    hour old; a live pid's old dir, a fresh dead dir and the caller's own
+    old dir stay."""
     import os
+    import tempfile
     import time
 
-    from bee_proof_spark.tmputil import pid_dir_alive, sweep_aged_dirs
+    from bee_proof_spark.tmputil import pid_dir
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    base = tmp_path / "bee-proof-tmp" / "sinks"
     old = time.time() - 7200  # 2h ago
-    fresh_d = tmp_path / "fresh"
-    fresh_d.mkdir()
-    old_orphan = tmp_path / "orphan"
-    old_orphan.mkdir()
-    os.utime(old_orphan, (old, old))
-    old_complete = tmp_path / "complete"
-    old_complete.mkdir()
-    (old_complete / "_SUCCESS").touch()
-    os.utime(old_complete, (old, old))
-    exempt_d = tmp_path / "mine"
-    exempt_d.mkdir()
-    os.utime(exempt_d, (old, old))
+    # a pid above pid_max (< 2^22) cannot exist, so it is dead
+    dead_old, dead_fresh = base / "pid4194999", base / "pid4194998"
+    alive_old, mine = base / f"pid{os.getppid()}", base / f"pid{os.getpid()}"
+    for d in (dead_old, dead_fresh, alive_old, mine):
+        d.mkdir(parents=True)
+    for d in (dead_old, alive_old, mine):
+        os.utime(d, (old, old))
 
-    sweep_aged_dirs(
-        str(tmp_path),
-        exempt=(str(exempt_d),),
-        max_age_s=3600,
-        keep=lambda p, age: age < 86400 and os.path.exists(os.path.join(p, "_SUCCESS")),
-    )
-    assert fresh_d.exists()          # under the age gate
-    assert not old_orphan.exists()   # aged out, no protection
-    assert old_complete.exists()     # complete snapshot inside grace window
-    assert exempt_d.exists()         # exempt outright
-
-    # pid-liveness: our own pid is alive; a pid from /proc/sys ranges that
-    # cannot exist (pid_max is < 2^22 + 1 slack) is dead.
-    alive = tmp_path / f"pid{os.getpid()}"
-    alive.mkdir()
-    os.utime(alive, (old, old))
-    dead = tmp_path / "pid4194999"
-    dead.mkdir()
-    os.utime(dead, (old, old))
-    sweep_aged_dirs(str(tmp_path), max_age_s=3600, keep=lambda p, a: pid_dir_alive(p))
-    assert alive.exists()
-    assert not dead.exists()
+    assert pid_dir("sinks") == str(mine)
+    assert not dead_old.exists()
+    assert dead_fresh.exists()
+    assert alive_old.exists()
+    assert mine.exists()
 
 
 def test_family_cache_bounded(spark, sf_smoke):
@@ -580,15 +562,14 @@ def test_build_session_honors_spark_graft_cpus(tmp_path):
 
 def test_reset_tmp_tree_keeps_other_processes_dirs(tmp_path):
     """Resetting the run's tree empties the warehouse but leaves what other
-    processes own under the tmp root: a live pid's sink dir and a complete
-    stream-replay snapshot."""
+    processes own under the tmp root: their pid dirs."""
     import os
 
     from bee_proof_spark.session import reset_tmp_tree
 
     base = tmp_path / "bee-proof-tmp"
     sink = base / "sinks" / f"pid{os.getpid()}" / "q"
-    snapshot = base / "stream-src" / "fixture-snap"
+    snapshot = base / "stream-src" / f"pid{os.getppid()}" / "fixture-snap"
     for d in (sink, snapshot, base / "warehouse" / "t"):
         d.mkdir(parents=True)
     (snapshot / "_SUCCESS").touch()
@@ -626,6 +607,59 @@ def test_sink_scratch_of_same_named_fixture_dirs_is_not_shared(spark, tmp_path):
     second = roundtrip_csv(spark, dirs[1])
     assert sorted(r.o_orderkey for r in first.collect()) == [1, 2, 3]
     assert sorted(r.o_orderkey for r in second.collect()) == [10, 20]
+
+
+def test_sink_scratch_is_new_per_call(spark, sf_smoke):
+    """Building a sink query twice on one fixture must not rewrite the
+    files the first build's lazy read still lists."""
+    from bee_proof_spark.queries.scans import roundtrip_csv
+
+    first = roundtrip_csv(spark, sf_smoke)
+    second = roundtrip_csv(spark, sf_smoke)
+    assert sorted(first.collect()) == sorted(second.collect())
+
+
+def test_stream_snapshot_is_built_safely_by_threads(spark, sf_smoke, tmp_path):
+    """Four threads replaying a fixture with no snapshot yet all succeed
+    and get one serial run's rows."""
+    import shutil
+    import threading
+
+    from bee_proof_spark.queries import load_all
+
+    sf_dir = str(tmp_path / "sf")
+    shutil.copytree(sf_smoke, sf_dir)  # a new corpus tag: no snapshot yet
+    build = load_all()["stream_dedup_state"].builder
+    barrier = threading.Barrier(4)
+    rows: dict[int, list] = {}
+    errors: list[Exception] = []
+
+    def run(i: int) -> None:
+        barrier.wait()
+        try:
+            rows[i] = sorted(build(spark, sf_dir).collect())
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    # Streams set these on the shared session while they start (replay._start,
+    # not thread-safe yet); put them back so later tests see the session's own.
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.streaming.checkpointFileManagerClass")
+    conf = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        threads = [threading.Thread(target=run, args=(i,)) for i in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    finally:
+        for k, v in conf.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert errors == []
+    serial = sorted(build(spark, sf_dir).collect())
+    assert serial and all(rows[i] == serial for i in range(4))
 
 
 def test_family_checkpoint_builds_once_across_threads(spark, sf_smoke):

@@ -575,6 +575,32 @@ def test_verification_run_leaves_foreign_session_alive(spark, tmp_path):
     assert spark.sql("SELECT 2").collect()[0][0] == 2
 
 
+@pytest.mark.parametrize("found", [None, "true"])
+def test_verification_run_leaves_session_conf_unchanged(spark, tmp_path, found):
+    """The runner turns Spark's own ${...} substitution off while it runs;
+    on return the caller's session holds the value it had, or no value."""
+    from bee_proof_spark.runner.verification import Verification
+
+    key = "spark.sql.variable.substitute"
+    script = tmp_path / "noop.hql"
+    script.write_text("SELECT 1 AS one;")
+    before = spark.conf.get(key, None)
+    try:
+        if found is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, found)
+        Verification.for_release("emr-5").add_task(str(script)).run(
+            spark=spark, out=lambda line: None
+        )
+        assert spark.conf.get(key, None) == found
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
 def test_manifest_without_tasks_key_is_malformed():
     """A manifest missing 'tasks' must error, not silently run zero tasks
     and exit 0 (caught live: passing a task object where a manifest belongs
