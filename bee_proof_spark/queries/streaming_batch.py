@@ -146,13 +146,9 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Windows covering the last hour of data stay in state (unemitted),
     exactly as a live pipeline would leave them pending."""
-    from bee_proof_spark.streaming import (
-        replay_events_stream,
-        run_to_memory_sink,
-        streaming_state_partitions,
-    )
+    from bee_proof_spark.streaming import replay_events_stream, run_to_memory_sink
 
-    stream = replay_events_stream(spark, sf_dir)
+    stream = replay_events_stream(spark, sf_dir, "agg")
     windowed = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"))
@@ -162,9 +158,6 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory_sink(
         windowed,
         output_mode="append",
-        state_partitions=streaming_state_partitions(
-            sf_dir, "agg", cores=spark.sparkContext.defaultParallelism
-        ),
         input_rows=table_info(sf_dir, "events").rows,
     )
 
@@ -204,13 +197,9 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrived). The projection carries only the dedup key (which physical
     row survives inside a batch is engine-arbitrary, the key set is
     not)."""
-    from bee_proof_spark.streaming import (
-        replay_events_stream,
-        run_to_memory_sink,
-        streaming_state_partitions,
-    )
+    from bee_proof_spark.streaming import replay_events_stream, run_to_memory_sink
 
-    stream = replay_events_stream(spark, sf_dir)
+    stream = replay_events_stream(spark, sf_dir, "insert_heavy")
     deduped = (
         stream.withColumn("hour", F.date_trunc("hour", "ts"))
         .withWatermark("hour", "1 hour")
@@ -224,9 +213,6 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory_sink(
         deduped,
         output_mode="append",
-        state_partitions=streaming_state_partitions(
-            sf_dir, "insert_heavy", cores=spark.sparkContext.defaultParallelism
-        ),
         input_rows=table_info(sf_dir, "events").rows,
     )
 
@@ -254,13 +240,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark x arrival rate, keyed and sharded by user_id; this is the
     canonical enrich-clicks-with-impressions shape.
     """
-    from bee_proof_spark.streaming import (
-        replay_events_stream,
-        run_to_memory_sink,
-        streaming_state_partitions,
-    )
+    from bee_proof_spark.streaming import replay_events_stream, run_to_memory_sink
 
-    stream = replay_events_stream(spark, sf_dir)
+    stream = replay_events_stream(spark, sf_dir, "join")
     clicks = (
         stream.filter(F.col("event_type") == "click")
         .withWatermark("ts", "2 hours")
@@ -294,9 +276,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory_sink(
         joined,
         output_mode="append",
-        state_partitions=streaming_state_partitions(
-            sf_dir, "join", cores=spark.sparkContext.defaultParallelism
-        ),
         input_rows=table_info(sf_dir, "events").rows,
     )
 
@@ -381,11 +360,7 @@ def stream_session_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    from bee_proof_spark.streaming import (
-        replay_events_stream,
-        run_to_memory_sink,
-        streaming_state_partitions,
-    )
+    from bee_proof_spark.streaming import replay_events_stream, run_to_memory_sink
 
     GAP_MS = 30 * 60 * 1000
 
@@ -453,7 +428,7 @@ def stream_session_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    stream = replay_events_stream(spark, sf_dir)
+    stream = replay_events_stream(spark, sf_dir, "insert_heavy")
     sessions = (
         # Project to the two columns the state function actually reads
         # BEFORE the stateful groupBy (guide §4.1): applyInPandasWithState
@@ -477,9 +452,6 @@ def stream_session_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory_sink(
         sessions,
         output_mode="append",
-        state_partitions=streaming_state_partitions(
-            sf_dir, "insert_heavy", cores=spark.sparkContext.defaultParallelism
-        ),
         input_rows=table_info(sf_dir, "events").rows,
     )
 
@@ -520,7 +492,6 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bee_proof_spark.queries.scans import _scratch
     from bee_proof_spark.streaming import replay_events_stream
-    from bee_proof_spark.streaming.replay import _start
 
     # Both dirs are new per call, so checkpoint and target stay in lockstep
     # (a stale checkpoint against a fresh target would skip already-committed
@@ -555,11 +526,11 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = replay_events_stream(spark, sf_dir).select(
         "user_id", "ts", "event_type", "event_id"
     )
-    q = _start(
+    q = (
         stream.writeStream.foreachBatch(upsert)
         .option("checkpointLocation", chk)
-        .trigger(availableNow=True),
-        spark,
+        .trigger(availableNow=True)
+        .start()
     )
     q.awaitTermination()
     shutil.rmtree(chk, ignore_errors=True)

@@ -59,8 +59,15 @@ EVENTS_SCHEMA = StructType(
 )
 
 
-def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events fixture.
+def replay_events_stream(
+    spark: SparkSession, sf_dir: str, profile: str | None = None
+) -> DataFrame:
+    """readStream over the events fixture, in a clone of ``spark``
+    (:func:`_stream_session`).
+
+    A stateful stream passes its state ``profile`` (see
+    :func:`streaming_state_partitions`); the clone runs at that width.
+    Without one it keeps the caller's ``spark.sql.shuffle.partitions``.
 
     The streaming reader needs a fixed schema, so the batch table read
     through :func:`tbl` is re-materialized as a parquet snapshot in this
@@ -109,8 +116,11 @@ def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.rename(build, snap)
         except OSError:  # another thread committed first: stream its snapshot
             shutil.rmtree(build, ignore_errors=True)
+    cores = spark.sparkContext.defaultParallelism
+    width = streaming_state_partitions(sf_dir, profile, cores=cores) if profile else None
     return (
-        spark.readStream.schema(EVENTS_SCHEMA)
+        _stream_session(spark, width)
+        .readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", _REPLAY_FILES_PER_TRIGGER)
         .parquet(snap)
     )
@@ -168,7 +178,8 @@ def streaming_state_partitions(
 ) -> int | None:
     """Shuffle-partition count for STATEFUL streaming queries, sized to the
     events corpus and the operator's state ``profile`` — or None to keep
-    the session default.
+    the session default. :func:`replay_events_stream` sets it on the
+    stream's own session (:func:`_stream_session`), never on the caller's.
 
     Streaming pays a per-partition cost batch queries don't (state-store
     commits, see ``_streaming_partitions_for_rows``), so the batch
@@ -211,8 +222,9 @@ def _parquet_sink_dir() -> str:
     return fresh_dir("stream-sink")
 
 
-#: Checkpoint manager for every stream this package starts. Spark's default
-#: for ``file:`` paths, FileContextBasedCheckpointFileManager, renames
+#: Checkpoint manager for every stream this package starts, set on the
+#: stream's own session by ``_stream_session``. Spark's default for ``file:``
+#: paths, FileContextBasedCheckpointFileManager, renames
 #: through AbstractFileSystem.renameInternal ->
 #: RawLocalFileSystem.getFileLinkStatus -> FileUtil.readLink, which forks a
 #: ``readlink`` process per rename when native libhadoop is absent: one fork
@@ -226,44 +238,36 @@ _CHECKPOINT_FILE_MANAGER = (
 )
 
 
-def _start(writer, spark: SparkSession, state_partitions: int | None = None):
-    """Start ``writer`` under this package's stream conf and return the query.
+def _stream_session(
+    spark: SparkSession, state_partitions: int | None = None
+) -> SparkSession:
+    """A clone of ``spark`` for one stream to run in: the one place a
+    stream's conf is set, and the caller's session is never written to.
 
-    The one place a stream's conf is set: the checkpoint manager above and,
-    when given, ``state_partitions`` as ``spark.sql.shuffle.partitions``.
-    The query clones the session while ``start()`` runs, so the caller's
-    values are back as soon as it returns; every batch still runs with the
-    values set here."""
-    conf = {"spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_FILE_MANAGER}
+    ``cloneSession()`` keeps the caller's conf as it is now, runtime sets
+    included (``newSession()`` would drop them), as ``StreamExecution``'s
+    own clone at ``start()`` does. Streaming listeners are per session, so
+    the caller's are added to the clone and see its queries. The clone
+    carries the checkpoint manager above and, when given,
+    ``state_partitions`` as ``spark.sql.shuffle.partitions``."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for listener in spark._jsparkSession.streams().listListeners():
+        clone._jsparkSession.streams().addListener(listener)
+    clone.conf.set("spark.sql.streaming.checkpointFileManagerClass", _CHECKPOINT_FILE_MANAGER)
     if state_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
-    prev = {k: spark.conf.get(k, None) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    try:
-        return writer.start()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        clone.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    return clone
 
 
 def run_to_memory_sink(
     stream_df: DataFrame,
     output_mode: str = "append",
-    state_partitions: int | None = None,
     input_rows: int | None = 0,
 ) -> DataFrame:
     """Execute a streaming query to completion (AvailableNow) and return the
-    sink contents as a DataFrame.
-
-    ``state_partitions`` (usually ``streaming_state_partitions(sf_dir)``)
-    is the streaming query's ``spark.sql.shuffle.partitions``: ``_start``
-    sets it only while the query starts, the count is baked into the
-    (ephemeral) checkpoint, and surrounding batch work keeps the
-    corpus-sized session default.
+    sink contents as a DataFrame of the stream's own session
+    (``stream_df.sparkSession``: for a replay stream, the clone that
+    :func:`_stream_session` made, at its state width).
 
     ``input_rows`` (usually the events table's catalog ``rows``) picks the
     sink:
@@ -284,16 +288,16 @@ def run_to_memory_sink(
     )
     if to_parquet:
         path = _parquet_sink_dir()
-        q = _start(
+        q = (
             stream_df.writeStream.format("parquet")
             .option("path", path)
             .option("checkpointLocation", f"{path}.ckpt")
             .outputMode(output_mode)
-            .trigger(availableNow=True),
-            spark,
-            state_partitions,
+            .trigger(availableNow=True)
+            .start()
         )
         q.awaitTermination()
+        shutil.rmtree(f"{path}.ckpt", ignore_errors=True)
         # Detect the zero-output case EXPLICITLY (no data files under
         # the sink dir) instead of a bare except that would also mask
         # genuine read failures - bad path, permissions, corrupt
@@ -308,13 +312,12 @@ def run_to_memory_sink(
             return spark.createDataFrame([], stream_df.schema)
         return spark.read.schema(stream_df.schema).parquet(path)
     name = f"bps_sink_{uuid.uuid4().hex[:8]}"
-    q = _start(
+    q = (
         stream_df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .trigger(availableNow=True),
-        spark,
-        state_partitions,
+        .trigger(availableNow=True)
+        .start()
     )
     q.awaitTermination()
     # The DataFrame keeps the sink's rows; the view would keep them for the

@@ -641,23 +641,16 @@ def test_stream_snapshot_is_built_safely_by_threads(spark, sf_smoke, tmp_path):
         except Exception as e:  # reported below
             errors.append(e)
 
-    # Streams set these on the shared session while they start (replay._start,
-    # not thread-safe yet); put them back so later tests see the session's own.
+    # Streams set these on their own session only: the shared one keeps its own.
     keys = ("spark.sql.shuffle.partitions", "spark.sql.streaming.checkpointFileManagerClass")
     conf = {k: spark.conf.get(k, None) for k in keys}
-    try:
-        threads = [threading.Thread(target=run, args=(i,)) for i in range(4)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-    finally:
-        for k, v in conf.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
     assert errors == []
+    assert {k: spark.conf.get(k, None) for k in keys} == conf
     serial = sorted(build(spark, sf_dir).collect())
     assert serial and all(rows[i] == serial for i in range(4))
 

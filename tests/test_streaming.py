@@ -245,9 +245,13 @@ def test_parquet_sink_spill_matches_memory_sink(spark, sf_smoke, monkeypatch):
     """Above _PARQUET_SINK_ROWS an append stream sinks to scratch parquet
     (the memory sink is a driver collect and aborts on driver.maxResultSize
     at the 100M-event probe decade); the spilled result must be row-for-row
-    identical to the memory-sink result."""
+    identical to the memory-sink result, and the sink leaves no checkpoint
+    behind."""
+    import glob
+
     from bee_proof_spark.queries import load_all
     from bee_proof_spark.streaming import replay
+    from bee_proof_spark.tmputil import pid_dir
 
     reg = load_all()
     via_memory = sorted(
@@ -258,6 +262,8 @@ def test_parquet_sink_spill_matches_memory_sink(spark, sf_smoke, monkeypatch):
         map(tuple, reg["stream_dedup_state"].builder(spark, sf_smoke).collect())
     )
     assert via_parquet == via_memory
+    # the sink's checkpoint goes once the query ends; its rows stay
+    assert glob.glob(os.path.join(pid_dir("stream-sink"), "*.ckpt")) == []
 
 
 def test_watermark_boundary_window_emitted(spark, tmp_path):
@@ -352,16 +358,16 @@ def test_dedup_state_evicts_expired_buckets(spark, sf_smoke):
     # bounded state: live rows never approach the full distinct key count
     # (sf0.001 measured: max 251 live vs 994 total keys, 993 evicted)
     assert max_state < expected
-    assert spark.table("evict_probe_sink").count() == expected
+    assert deduped.sparkSession.table("evict_probe_sink").count() == expected
 
 
 def test_stream_start_leaves_session_conf_and_runs_at_state_width(
     spark, sf_smoke, monkeypatch
 ):
-    """The stream helper sets its conf only around ``start()``: once the
-    builder returns, the session's shuffle width and checkpoint manager are
-    what they were, yet every batch's state operator ran at the requested
-    width (the query clones the session inside ``start()``)."""
+    """The stream helper sets its conf on the stream's own session: once
+    the builder returns, the caller's shuffle width and checkpoint manager
+    are what they were, yet every batch's state operator ran at the
+    requested width, and a listener on the caller saw every batch."""
     from pyspark.sql.streaming import StreamingQueryListener
 
     from bee_proof_spark.queries import load_all
@@ -417,6 +423,92 @@ def test_stream_start_leaves_session_conf_and_runs_at_state_width(
     assert set(widths) == {8}
 
 
+def test_stream_build_leaves_the_callers_width_alone(spark, sf_smoke, monkeypatch):
+    """While a stateful stream builds, a thread polling the caller's
+    session sees only the session's own ``spark.sql.shuffle.partitions``:
+    the stream's width is set on its clone, never on the caller, so a
+    batch query planned meanwhile on another thread keeps its width."""
+    import threading
+
+    from bee_proof_spark.queries import load_all
+
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
+    key = "spark.sql.shuffle.partitions"
+    own = spark.conf.get(key)
+    # a session already at the stream's width (8) would make this vacuous
+    assert own != "8"
+    seen: set[str] = set()
+    done = threading.Event()
+
+    def poll() -> None:
+        while not done.is_set():
+            seen.add(spark.conf.get(key))
+
+    poller = threading.Thread(target=poll)
+    poller.start()
+    try:
+        load_all()["stream_dedup_state"].builder(spark, sf_smoke)
+    finally:
+        done.set()
+        poller.join(timeout=60)
+    assert not poller.is_alive()
+    assert seen == {own}
+
+
+def test_stream_runs_in_a_clone_with_runtime_conf_and_listeners(spark, sf_smoke):
+    """A replay stream runs in a clone of the caller's session (the JVM
+    session's ``cloneSession()``), not in the caller's. The clone keeps
+    conf set at runtime, here the session time zone, which
+    ``newSession()`` would drop. The caller's streaming listeners, read
+    with ``streams().listListeners()``, are added to the clone, so a
+    listener on the caller gets the stream's terminated event."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from bee_proof_spark.streaming import replay_events_stream
+
+    class Listener(StreamingQueryListener):
+        def __init__(self) -> None:
+            self.terminated: list[str] = []
+
+        def onQueryStarted(self, event) -> None:
+            pass
+
+        def onQueryProgress(self, event) -> None:
+            pass
+
+        def onQueryIdle(self, event) -> None:
+            pass
+
+        def onQueryTerminated(self, event) -> None:
+            self.terminated.append(str(event.runId))
+
+    key, zone = "spark.sql.session.timeZone", "Asia/Tokyo"
+    own = spark.conf.get(key)
+    assert own != zone
+    replay_events_stream(spark, sf_smoke)  # the snapshot, in the session's own zone
+    listener = Listener()
+    spark.conf.set(key, zone)
+    spark.streams.addListener(listener)
+    try:
+        stream = replay_events_stream(spark, sf_smoke).select("event_id")
+        clone = stream.sparkSession
+        assert clone is not spark
+        assert clone.conf.get(key) == zone
+        listeners = [
+            {str(x) for x in s._jsparkSession.streams().listListeners()}
+            for s in (spark, clone)
+        ]
+        assert listeners[0] and listeners[0] <= listeners[1]
+        assert run_to_memory_sink(stream).count() > 0
+        deadline = time.monotonic() + 60
+        while not listener.terminated and time.monotonic() < deadline:
+            time.sleep(0.05)
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, own)
+    assert len(listener.terminated) == 1
+
+
 def test_memory_sink_leaves_no_view(spark, sf_smoke):
     """The memory sink's temp view is dropped once the DataFrame is taken:
     two builds leave no ``bps_sink_*`` view, and each result still reads
@@ -434,22 +526,22 @@ def test_restart_resumes_from_its_checkpoint(spark, tmp_path):
     offset committed: it reads 0 rows and emits nothing new. Pins the round
     trip of the offset, commit and state logs through the checkpoint
     manager the stream helper installs."""
-    from bee_proof_spark.streaming.replay import _start
+    from bee_proof_spark.streaming.replay import _stream_session
 
     src, out, chk = (str(tmp_path / d) for d in ("src", "out", "chk"))
     spark.range(100).selectExpr("id", "id % 7 AS k").write.parquet(src)
 
     def run():
-        q = _start(
-            spark.readStream.schema("id long, k long")
+        q = (
+            _stream_session(spark, 3)
+            .readStream.schema("id long, k long")
             .parquet(src)
             .dropDuplicates(["k"])
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", chk)
-            .trigger(availableNow=True),
-            spark,
-            state_partitions=3,
+            .trigger(availableNow=True)
+            .start()
         )
         q.awaitTermination()
         return sum(p["numInputRows"] for p in q.recentProgress)
@@ -466,47 +558,55 @@ def test_restart_resumes_from_its_checkpoint(spark, tmp_path):
 
 
 def test_every_stream_starts_through_the_helper():
-    """Every ``.writeStream`` in the package is built inside the first
-    argument of a ``_start(...)`` call, in one of the helper's callers, and
-    only the helper calls ``.start()`` on a stream writer. So the checkpoint
-    manager and the state width are set in one place; a stream started any
-    other way would silently go back to Spark's fork-per-rename default."""
+    """Every ``.readStream`` in the package is taken from a
+    ``_stream_session(...)`` result, and only ``_stream_session`` sets the
+    two stream keys. So every stream runs in its own clone, with the
+    checkpoint manager and the state width set in one place; a stream
+    read any other way would silently go back to Spark's fork-per-rename
+    default, and a key set anywhere else would change a caller's session.
+    The runner is left out: its ``SET`` statements change the caller's
+    session on purpose, as a script's ``SET`` does in Hive."""
     import ast
     import pathlib
 
     import bee_proof_spark
 
-    callers = {
-        ("replay.py", "run_to_memory_sink"),
-        ("streaming_batch.py", "stream_foreach_batch_upsert"),
+    keys = {
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.checkpointFileManagerClass",
     }
     pkg = pathlib.Path(bee_proof_spark.__file__).parent
-    writers, starts = set(), set()
+    found = []
     for path in sorted(pkg.rglob("*.py")):
+        if "runner" in path.relative_to(pkg).parts:
+            continue
         tree = ast.parse(path.read_text(), str(path))
         parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
-        in_start = {
-            n
-            for c in ast.walk(tree)
-            if isinstance(c, ast.Call) and getattr(c.func, "id", None) == "_start"
-            for n in ast.walk(c.args[0])
-        }
         for n in ast.walk(tree):
-            if not isinstance(n, ast.Attribute):
+            if isinstance(n, ast.Attribute) and n.attr == "readStream":
+                hit = ("reads", ast.unparse(n.value))
+            elif (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("set", "unset")
+                and ast.unparse(n.func.value).endswith("conf")
+                and n.args
+                and isinstance(n.args[0], ast.Constant)
+                and n.args[0].value in keys
+            ):
+                hit = ("sets", n.args[0].value)
+            else:
                 continue
             fn = n
             while fn in parent and not isinstance(fn, ast.FunctionDef):
                 fn = parent[fn]
-            where = (path.name, getattr(fn, "name", "<module>"))
-            if n.attr == "writeStream":
-                writers.add((*where, n in in_start))
-            # the runner's regex m.start() calls are not streams
-            elif n.attr in ("start", "toTable") and (
-                "writeStream" in ast.unparse(n.value) or where[1] == "_start"
-            ):
-                starts.add((*where, ast.unparse(n)))
-    assert writers == {(*c, True) for c in callers}
-    assert starts == {("replay.py", "_start", "writer.start")}
+            found.append((*hit, path.name, getattr(fn, "name", "<module>")))
+    assert sorted(found) == sorted(
+        [
+            ("reads", "_stream_session(spark, width)", "replay.py", "replay_events_stream"),
+            *(("sets", k, "replay.py", "_stream_session") for k in keys),
+        ]
+    )
 
 
 def test_session_gap_boundary_exact_gap_merges(spark):
